@@ -32,6 +32,10 @@ Scale shape at 100 TB:
 The train/held-out split is md5-uniform over doc_id
 (functions/hashing.hash_unit) — deterministic, oracle-replayed; the
 held-out docs genuinely exercise the backoff leg.
+
+Kneser-Ney smoothing at any order >= 2 is the order-n section below
+(KNnModel / fit_knn / score_docs_knn / knn_perplexity); both families
+stream through one start_score_stream / read_scores pair.
 """
 
 from __future__ import annotations
@@ -267,26 +271,27 @@ def lm_perplexity(
     )
 
 
-def start_lm_score_stream(
+def start_score_stream(
     docs_stream: DataFrame,
-    model: BigramLM,
+    score_fn,
     out_dir: str,
     checkpoint: str,
-    alpha: float = DEFAULT_ALPHA,
 ):
     """Score a DOCUMENT STREAM against a fitted (static) model — the
-    production fluency screen for incoming crawls: per micro-batch,
-    score_docs runs batch-side in foreachBatch (the model's count
-    tables are static DataFrames, so each batch is an ordinary
-    stream-static scoring join) and the scored rows land idempotently
-    at ``out_dir/batch_id=N`` (a replayed batch overwrites its own
-    partition — the same exactly-once recipe as the sketch streams).
-    Returns the started availableNow query."""
+    production fluency screen for incoming crawls.  ``score_fn`` is
+    the batch scorer bound to its model, e.g. ``lambda df:
+    score_docs_knn(df, model)`` or ``lambda df: score_docs(df,
+    model)``: per micro-batch it runs batch-side in foreachBatch (the
+    model's count tables are static DataFrames, so each batch is an
+    ordinary stream-static scoring join) and the scored rows land
+    idempotently at ``out_dir/batch_id=N`` (a replayed batch
+    overwrites its own partition — the same exactly-once recipe as
+    the sketch streams).  Returns the started availableNow query."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        score_docs(batch_df, model, alpha=alpha).write.mode(
-            "overwrite"
-        ).parquet(f"{out_dir}/batch_id={batch_id}")
+        score_fn(batch_df).write.mode("overwrite").parquet(
+            f"{out_dir}/batch_id={batch_id}"
+        )
 
     return (
         docs_stream.writeStream.foreachBatch(write_batch)
@@ -297,67 +302,16 @@ def start_lm_score_stream(
     )
 
 
-def read_lm_scores(spark, out_dir: str) -> DataFrame:
-    """All committed per-batch score partitions as one frame.  Before
-    the first commit: empty, not an error."""
-    import glob
-    import os
+def read_scores(spark, out_dir: str, score_fn) -> DataFrame:
+    """All committed per-batch score partitions of
+    :func:`start_score_stream` as one frame.  Before the first commit:
+    empty with ``score_fn``'s output schema (derived from the plan of
+    an empty document frame — no Spark job), not an error."""
+    from prod2vec_spark.sources.artifacts import batch_partials_exist
 
-    os.makedirs(out_dir, exist_ok=True)
-    if not glob.glob(os.path.join(out_dir, "batch_id=*", "*.parquet")):
-        return spark.createDataFrame(
-            [],
-            "doc_id long, n_pairs long, n_backoff long, "
-            "avg_nll double, ppl double",
-        )
-    return (
-        spark.read.option("basePath", out_dir)
-        .parquet(out_dir)
-        .drop("batch_id")
-    )
-
-
-def start_kn_score_stream(
-    docs_stream: DataFrame,
-    model: "KNModel",
-    out_dir: str,
-    checkpoint: str,
-    discount: float | None = None,
-):
-    """Score a DOCUMENT STREAM against a fitted KN model — the
-    Kneser-Ney twin of :func:`start_lm_score_stream`, same
-    stream-static scoring join per micro-batch and the same
-    idempotent-by-path ``out_dir/batch_id=N`` sink (batch parity with
-    ``score_docs_kn`` pytest-locked)."""
-    d = DEFAULT_DISCOUNT if discount is None else discount
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        score_docs_kn(batch_df, model, discount=d).write.mode(
-            "overwrite"
-        ).parquet(f"{out_dir}/batch_id={batch_id}")
-
-    return (
-        docs_stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_kn_scores(spark, out_dir: str) -> DataFrame:
-    """All committed per-batch KN score partitions as one frame.
-    Before the first commit: empty, not an error."""
-    import glob
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    if not glob.glob(os.path.join(out_dir, "batch_id=*", "*.parquet")):
-        return spark.createDataFrame(
-            [],
-            "doc_id long, n_pairs long, n_unseen long, "
-            "avg_nll double, ppl double",
-        )
+    if not batch_partials_exist(spark, out_dir):
+        empty = spark.createDataFrame([], "doc_id long, text string")
+        return spark.createDataFrame([], score_fn(empty).schema)
     return (
         spark.read.option("basePath", out_dir)
         .parquet(out_dir)
@@ -367,268 +321,6 @@ def read_kn_scores(spark, out_dir: str) -> DataFrame:
 
 DEFAULT_DISCOUNT = 0.75  # the standard absolute discount (Chen &
 # Goodman 1998 report D in [0.7, 0.8] across corpora)
-
-
-def kn_perplexity(
-    docs: DataFrame,
-    train_frac: float = 0.8,
-    discount: float = DEFAULT_DISCOUNT,
-    seed: str = "lm",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    broadcast_unigrams: bool = True,
-    tagged: DataFrame | None = None,
-) -> DataFrame:
-    """Per-document bigram perplexity under INTERPOLATED KNESER-NEY
-    smoothing (Chen & Goodman 1998 §2.7) — the other standard n-gram
-    smoothing family next to Stupid Backoff (``lm_perplexity``).  KN's
-    insight: the backoff distribution should weight a word by how many
-    DISTINCT contexts it continues (N1+(•,w)), not by raw frequency —
-    'Francisco' is frequent but continues only 'San', so it gets a
-    small continuation probability.
-
-    Model, for an adjacent pair (w1, w2) with train-split counts:
-
-        den(w1)   = Σ_w c2(w1, w)            (left-context total)
-        λ(w1)     = D · N1+(w1,•) / den(w1)  (discount mass reassigned)
-        P_cont(w2)= (N1+(•,w2) + 1) / (n_types + V + 1)
-        P(w2|w1)  = (max(c2−D, 0)) / den(w1) + λ(w1) · P_cont(w2)
-                  = P_cont(w2)               when w1 is unseen as a
-                                             left context
-
-    The continuation leg is add-one-smoothed (the lm_perplexity
-    convention) so unseen words score > 0 — no log(0) anywhere; λ > 0
-    whenever den exists (N1+ ≥ 1), so the interpolated sum is always
-    positive.  Output mirrors lm_perplexity: (doc_id, is_train 0/1,
-    n_pairs, n_unseen — pairs absent from the train bigram table —
-    avg_nll, ppl), rounded at 4 so both engines hash identically.
-
-    Scale shape: identical to score_docs — counting is hash-aggs over
-    the train pair stream; the per-w1 stats table (den, N1+(w1,•))
-    and per-w2 continuation table are vocab-sized broadcast probes
-    (``broadcast_unigrams=False`` flips them to shuffle joins for
-    web-scale vocabularies); the bigram table joins on the pair key
-    (corpus-sized — honestly not broadcast); scalars ride a 1-row
-    broadcast cross join.
-
-    100 TB caveat (plan-read): this SELF-TRAINED single-expression
-    form re-derives the c2 lineage once per downstream statistic
-    (Catalyst re-inlines the shared aggregate — 4 tokenize+shuffle
-    passes at plan level), which is fine for the oracled audit at
-    driver scale but wrong for production.  The train-once/score-many
-    path is the BigramLM pattern: persist the count tables (c2 /
-    left / right / totals) to parquet after one fit pass — the
-    pipeline's checkpoint discipline — and score any number of
-    corpora against the stored tables with zero re-derivation."""
-    if not 0.0 < discount < 1.0:
-        raise ValueError(f"discount must be in (0, 1), got {discount}")
-    if tagged is None:
-        tagged = with_train_split(docs, train_frac, seed=seed, id_col=id_col)
-    train = tagged.where(F.col("is_train"))
-    tpairs = doc_pairs(train, id_col=id_col, text_col=text_col)
-    c2 = tpairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2"))
-    left = c2.groupBy("w1").agg(
-        F.sum("c2").alias("den"), F.count(F.lit(1)).alias("n1p_left")
-    )
-    right = c2.groupBy("w2").agg(F.count(F.lit(1)).alias("n1p_right"))
-    toks = _bound_toks(train, text_col).select(F.explode("_toks").alias("w"))
-    totals = c2.agg(F.count(F.lit(1)).alias("n_types")).crossJoin(
-        toks.agg(F.countDistinct("w").alias("v_vocab"))
-    )
-    if totals.first()["n_types"] == 0:
-        raise ValueError(
-            "kn_perplexity: training split has no bigrams — cannot "
-            "estimate a model"
-        )
-    if broadcast_unigrams:
-        left, right = F.broadcast(left), F.broadcast(right)
-    pairs = doc_pairs(tagged, id_col=id_col, text_col=text_col)
-    pcont = (
-        (F.coalesce(F.col("n1p_right"), F.lit(0)) + F.lit(1))
-        / (F.col("n_types") + F.col("v_vocab") + F.lit(1))
-    )
-    lam = F.lit(discount) * F.col("n1p_left") / F.col("den")
-    seen_leg = (
-        F.greatest(
-            F.coalesce(F.col("c2"), F.lit(0)) - F.lit(discount), F.lit(0.0)
-        )
-        / F.col("den")
-        + lam * pcont
-    )
-    scored = (
-        pairs.join(c2, ["w1", "w2"], "left")
-        .join(left, "w1", "left")
-        .join(right, "w2", "left")
-        .crossJoin(F.broadcast(totals))
-        .select(
-            id_col,
-            "is_train",
-            F.when(F.col("den").isNotNull(), seen_leg)
-            .otherwise(pcont)
-            .alias("prob"),
-            F.when(F.col("c2").isNull(), F.lit(1)).otherwise(F.lit(0)).alias(
-                "unseen"
-            ),
-        )
-    )
-    return (
-        scored.groupBy(id_col)
-        .agg(
-            F.max(F.col("is_train").cast("long")).alias("is_train"),
-            F.count(F.lit(1)).alias("n_pairs"),
-            F.sum("unseen").alias("n_unseen"),
-            F.round(F.avg(-F.log("prob")), 4).alias("avg_nll"),
-            F.round(F.exp(F.avg(-F.log("prob"))), 4).alias("ppl"),
-        )
-    )
-
-
-class KNModel:
-    """A fitted interpolated-KN bigram model: four small DataFrames —
-    pair counts c2(w1,w2), left-context stats (den, N1+(w1,•)),
-    continuation counts N1+(•,w2), and the (n_types, V) scalar — the
-    train-once / score-many handle kn_perplexity's docstring promises
-    (the BigramLM pattern): persisting these to parquet after ONE fit
-    pass removes the self-trained form's per-statistic lineage
-    re-derivation, and any number of corpora then score against the
-    stored tables."""
-
-    def __init__(
-        self,
-        c2: DataFrame,
-        left: DataFrame,
-        right: DataFrame,
-        totals: DataFrame,
-    ):
-        self.c2 = c2
-        self.left = left
-        self.right = right
-        self.totals = totals
-
-    def save(self, dir_path: str) -> None:
-        self.c2.write.mode("overwrite").parquet(f"{dir_path}/c2")
-        self.left.write.mode("overwrite").parquet(f"{dir_path}/left")
-        self.right.write.mode("overwrite").parquet(f"{dir_path}/right")
-        self.totals.write.mode("overwrite").parquet(f"{dir_path}/totals")
-
-    @staticmethod
-    def load(spark, dir_path: str) -> "KNModel":
-        return KNModel(
-            spark.read.parquet(f"{dir_path}/c2"),
-            spark.read.parquet(f"{dir_path}/left"),
-            spark.read.parquet(f"{dir_path}/right"),
-            spark.read.parquet(f"{dir_path}/totals"),
-        )
-
-    def pruned(self, min_count: int = 2) -> "KNModel":
-        """Count-floor pruning of the BIGRAM table only (BigramLM's
-        knob): pruned pairs fall to the discounted-to-zero numerator
-        but keep the λ·P_cont leg, because left/right/totals stay
-        computed over the FULL training mass — the model still
-        normalizes over what it saw, exactly like BigramLM.pruned."""
-        return KNModel(
-            self.c2.where(F.col("c2") >= min_count),
-            self.left,
-            self.right,
-            self.totals,
-        )
-
-
-def fit_kn(
-    train_docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> KNModel:
-    """Estimate the KN count tables from a training corpus: one pair
-    hash-agg + three aggregates DERIVED from it (the derivations cost
-    re-lineage here, which is exactly why the production path calls
-    ``model.save`` before scoring — parquet breaks the re-derivation,
-    see kn_perplexity's 100 TB caveat)."""
-    tpairs = doc_pairs(train_docs, id_col=id_col, text_col=text_col)
-    c2 = tpairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2"))
-    left = c2.groupBy("w1").agg(
-        F.sum("c2").alias("den"), F.count(F.lit(1)).alias("n1p_left")
-    )
-    right = c2.groupBy("w2").agg(F.count(F.lit(1)).alias("n1p_right"))
-    toks = _bound_toks(train_docs, text_col).select(
-        F.explode("_toks").alias("w")
-    )
-    totals = c2.agg(F.count(F.lit(1)).alias("n_types")).crossJoin(
-        toks.agg(F.countDistinct("w").alias("v_vocab"))
-    )
-    if totals.first()["n_types"] == 0:
-        raise ValueError(
-            "fit_kn: training corpus has no bigrams — cannot estimate "
-            "a model"
-        )
-    return KNModel(c2, left, right, totals)
-
-
-def score_docs_kn(
-    docs: DataFrame,
-    model: KNModel,
-    discount: float = DEFAULT_DISCOUNT,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    broadcast_unigrams: bool = True,
-) -> DataFrame:
-    """Per-document KN score against a FITTED model — identical
-    formula and output contract to kn_perplexity's scoring half
-    ((doc_id [, is_train], n_pairs, n_unseen, avg_nll, ppl);
-    equality with the self-trained form on the same split is
-    pytest-locked), with the model tables read back instead of
-    re-derived."""
-    if not 0.0 < discount < 1.0:
-        raise ValueError(f"discount must be in (0, 1), got {discount}")
-    has_tag = "is_train" in docs.columns
-    pairs = doc_pairs(docs, id_col=id_col, text_col=text_col)
-    left, right = model.left, model.right
-    if broadcast_unigrams:
-        left, right = F.broadcast(left), F.broadcast(right)
-    pcont = (
-        (F.coalesce(F.col("n1p_right"), F.lit(0)) + F.lit(1))
-        / (F.col("n_types") + F.col("v_vocab") + F.lit(1))
-    )
-    lam = F.lit(discount) * F.col("n1p_left") / F.col("den")
-    seen_leg = (
-        F.greatest(
-            F.coalesce(F.col("c2"), F.lit(0)) - F.lit(discount), F.lit(0.0)
-        )
-        / F.col("den")
-        + lam * pcont
-    )
-    carry = ["is_train"] if has_tag else []
-    scored = (
-        pairs.join(model.c2, ["w1", "w2"], "left")
-        .join(left, "w1", "left")
-        .join(right, "w2", "left")
-        .crossJoin(F.broadcast(model.totals))
-        .select(
-            id_col,
-            *carry,
-            F.when(F.col("den").isNotNull(), seen_leg)
-            .otherwise(pcont)
-            .alias("prob"),
-            F.when(F.col("c2").isNull(), F.lit(1)).otherwise(F.lit(0)).alias(
-                "unseen"
-            ),
-        )
-    )
-    tag_aggs = (
-        [F.max(F.col("is_train").cast("long")).alias("is_train")]
-        if has_tag
-        else []
-    )
-    return (
-        scored.groupBy(id_col)
-        .agg(
-            *tag_aggs,
-            F.count(F.lit(1)).alias("n_pairs"),
-            F.sum("unseen").alias("n_unseen"),
-            F.round(F.avg(-F.log("prob")), 4).alias("avg_nll"),
-            F.round(F.exp(F.avg(-F.log("prob"))), 4).alias("ppl"),
-        )
-    )
 
 
 def kn_perplexity_by_lang(
@@ -646,8 +338,11 @@ def kn_perplexity_by_lang(
     continuation stats per (lang, w), per-lang (n_types, V)), so 100
     languages cost the same hash-agg shuffles as one.  Documents of a
     language with NO training bigrams are absent (inner totals join —
-    no model to score against; the lm_by_lang convention).  Output
-    mirrors kn_perplexity plus the lang column."""
+    no model to score against; the lm_by_lang convention).  Per
+    language the probability is the order-2 case of _knm_prob
+    (knn_perplexity at order=2); output (doc_id, lang, is_train 0/1,
+    n_pairs, n_unseen — pairs absent from the language's train bigram
+    table —, avg_nll, ppl)."""
     if not 0.0 < discount < 1.0:
         raise ValueError(f"discount must be in (0, 1), got {discount}")
     tagged = with_train_split(docs, train_frac, seed=seed, id_col=id_col)
@@ -1069,7 +764,7 @@ def lm_perplexity_by_lang(
     )
 
 
-# -------------------------------------------------- trigram Kneser-Ney
+# ------------------------------------------- Kneser-Ney discounts
 def estimate_discount(counts: DataFrame, count_col: str) -> float:
     """Ney-Essen-Kneser absolute-discount estimate from counts-of-
     counts: D = n1 / (n1 + 2·n2), where n_k = number of n-gram types
@@ -1088,41 +783,6 @@ def estimate_discount(counts: DataFrame, count_col: str) -> float:
     return n1 / (n1 + 2.0 * n2)
 
 
-def _kn3_prob(discount: float):
-    """The shared three-leg interpolated-KN probability Column
-    (canonical association order — the DuckDB twin replays it
-    operand-for-operand so the IEEE arithmetic hashes identically):
-
-        P1        = (N1+(·,w3)+1) / (types₂ + V + 1)       continuation
-        P2(w3|w2) = max(c₂'(w2,w3)−D,0)/den₂'(w2)
-                    + (D·N1+(w2,·)/den₂'(w2))·P1            or P1 unseen
-        P3(w3|w1,w2) = max(c3−D,0)/den₁₂(w1,w2)
-                    + (D·N1+(w1,w2,·)/den₁₂)·P2             or P2 unseen
-
-    where c₂' are CONTINUATION counts (distinct w1 preceding each
-    (w2,w3)) — the Kneser-Ney lower order, not raw bigram counts."""
-    d = F.lit(discount)
-    p1 = (F.coalesce(F.col("n1p_r3"), F.lit(0)) + F.lit(1)) / (
-        F.col("n_types2p") + F.col("v_vocab") + F.lit(1)
-    )
-    p2_seen = (
-        F.greatest(
-            F.coalesce(F.col("c2p"), F.lit(0)).cast("double") - d, F.lit(0.0)
-        )
-        / F.col("den2p")
-        + (d * F.col("n1p_mid") / F.col("den2p")) * p1
-    )
-    p2 = F.when(F.col("den2p").isNotNull(), p2_seen).otherwise(p1)
-    p3_seen = (
-        F.greatest(
-            F.coalesce(F.col("c3"), F.lit(0)).cast("double") - d, F.lit(0.0)
-        )
-        / F.col("den12")
-        + (d * F.col("n1p_ctx") / F.col("den12")) * p2
-    )
-    return F.when(F.col("den12").isNotNull(), p3_seen).otherwise(p2)
-
-
 def _mkn_discount(c: Column, d: "tuple[float, float, float]") -> Column:
     """D(c): count-dependent absolute discount — D1 for singletons,
     D2 for doubletons, D3+ above; 0 below 1 (an absent n-gram has no
@@ -1133,52 +793,6 @@ def _mkn_discount(c: Column, d: "tuple[float, float, float]") -> Column:
         .when(c == 1, F.lit(d[0]))
         .otherwise(F.lit(0.0))
     )
-
-
-def _kn3m_prob(
-    d3: "tuple[float, float, float]", d2: "tuple[float, float, float]"
-):
-    """The MODIFIED-KN three-leg probability Column (Chen & Goodman
-    1999 §3): count-dependent discounts per level, with λ(context)
-    reassigning exactly the removed mass through the per-context
-    count-of-count splits:
-
-        λ(ctx) = (D1·N1(ctx) + D2·N2(ctx) + D3+·N3+(ctx)) / den(ctx)
-
-    Same association-order discipline as _kn3_prob; with
-    D1=D2=D3+=D the expressions agree value-for-value with the
-    single-D form (the reduction pytest)."""
-    c3 = F.coalesce(F.col("c3"), F.lit(0))
-    c2p = F.coalesce(F.col("c2p"), F.lit(0))
-    p1 = (F.coalesce(F.col("n1p_r3"), F.lit(0)) + F.lit(1)) / (
-        F.col("n_types2p") + F.col("v_vocab") + F.lit(1)
-    )
-    lam2 = (
-        F.lit(d2[0]) * F.col("n1_mid")
-        + F.lit(d2[1]) * F.col("n2_mid")
-        + F.lit(d2[2]) * F.col("n3p_mid")
-    ) / F.col("den2p")
-    p2_seen = (
-        F.greatest(
-            c2p.cast("double") - _mkn_discount(c2p, d2), F.lit(0.0)
-        )
-        / F.col("den2p")
-        + lam2 * p1
-    )
-    p2 = F.when(F.col("den2p").isNotNull(), p2_seen).otherwise(p1)
-    lam12 = (
-        F.lit(d3[0]) * F.col("n1_ctx")
-        + F.lit(d3[1]) * F.col("n2_ctx")
-        + F.lit(d3[2]) * F.col("n3p_ctx")
-    ) / F.col("den12")
-    p3_seen = (
-        F.greatest(
-            c3.cast("double") - _mkn_discount(c3, d3), F.lit(0.0)
-        )
-        / F.col("den12")
-        + lam12 * p2
-    )
-    return F.when(F.col("den12").isNotNull(), p3_seen).otherwise(p2)
 
 
 def estimate_mkn_discounts(
@@ -1212,342 +826,14 @@ def estimate_mkn_discounts(
     return (d1, d2, d3p)
 
 
-class KN3Model:
-    """A fitted interpolated-KN TRIGRAM model (VERDICT r12 ask #3 —
-    the order-3 extension of KNModel): six small-to-corpus-sized
-    DataFrames — c3(w1,w2,w3), per-context stats (den₁₂, N1+(w1,w2,·)),
-    continuation bigrams c₂'(w2,w3), per-middle stats (den₂',
-    N1+(w2,·)), per-word continuation counts N1+(·,w3), and the
-    (types₂, V) scalar.  Same train-once / score-many contract as
-    KNModel: persist after one fit pass, score any corpus against the
-    stored tables."""
-
-    def __init__(self, c3, ctx, c2p, mid, r3, totals):
-        self.c3 = c3
-        self.ctx = ctx
-        self.c2p = c2p
-        self.mid = mid
-        self.r3 = r3
-        self.totals = totals
-
-    _PARTS = ("c3", "ctx", "c2p", "mid", "r3", "totals")
-
-    def save(self, dir_path: str) -> None:
-        for name in self._PARTS:
-            getattr(self, name).write.mode("overwrite").parquet(
-                f"{dir_path}/{name}"
-            )
-
-    @staticmethod
-    def load(spark, dir_path: str) -> "KN3Model":
-        return KN3Model(
-            *(spark.read.parquet(f"{dir_path}/{n}") for n in KN3Model._PARTS)
-        )
-
-    def pruned(self, min_count: int = 2) -> "KN3Model":
-        """Count-floor pruning of the TRIGRAM table only (the KNModel
-        convention): pruned triples fall to the discounted-to-zero
-        numerator but keep their λ·P2 leg — stats tables stay computed
-        over the full training mass."""
-        return KN3Model(
-            self.c3.where(F.col("c3") >= min_count),
-            self.ctx, self.c2p, self.mid, self.r3, self.totals,
-        )
-
-
-def fit_kn3(
-    train_docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> KN3Model:
-    """Estimate the trigram-KN count tables: ONE triple hash-agg plus
-    five aggregates derived from it.  The continuation-bigram table
-    c₂'(w2,w3) = |{w1 : c3(w1,w2,w3) > 0}| is a groupBy over c3 — the
-    KN lower order counts distinct CONTEXTS, never raw frequency
-    (lm.py's kn_perplexity docstring: 'Francisco').  Scale: c3 and its
-    two pair-keyed derivatives are corpus-sized shuffle aggregates;
-    mid/r3/totals are vocab-sized or scalar."""
-    # bind-staged _toks + triple array (VERDICT r16 ask #4)
-    staged = bind(
-        _bound_toks(train_docs, text_col),
-        "_ta",
-        token_triples(F.col("_toks")),
-    )
-    t_trips = staged.select(F.explode(F.col("_ta")).alias("_t"))
-    c3 = t_trips.groupBy(
-        F.col("_t.w1").alias("w1"),
-        F.col("_t.w2").alias("w2"),
-        F.col("_t.w3").alias("w3"),
-    ).agg(F.count(F.lit(1)).alias("c3"))
-    # per-context count-of-count splits (nk_ctx = continuation types
-    # seen exactly k / ≥3 times) ride the SAME hash-agg — they cost
-    # three more partial aggregates, no extra shuffle, and are what
-    # the MODIFIED-KN lambda needs (single-D scoring ignores them)
-    ctx = c3.groupBy("w1", "w2").agg(
-        F.sum("c3").alias("den12"),
-        F.count(F.lit(1)).alias("n1p_ctx"),
-        F.sum((F.col("c3") == 1).cast("long")).alias("n1_ctx"),
-        F.sum((F.col("c3") == 2).cast("long")).alias("n2_ctx"),
-        F.sum((F.col("c3") >= 3).cast("long")).alias("n3p_ctx"),
-    )
-    c2p = c3.groupBy("w2", "w3").agg(F.count(F.lit(1)).alias("c2p"))
-    mid = c2p.groupBy("w2").agg(
-        F.sum("c2p").alias("den2p"),
-        F.count(F.lit(1)).alias("n1p_mid"),
-        F.sum((F.col("c2p") == 1).cast("long")).alias("n1_mid"),
-        F.sum((F.col("c2p") == 2).cast("long")).alias("n2_mid"),
-        F.sum((F.col("c2p") >= 3).cast("long")).alias("n3p_mid"),
-    )
-    r3 = c2p.groupBy("w3").agg(F.count(F.lit(1)).alias("n1p_r3"))
-    toks = staged.select(F.explode("_toks").alias("w"))
-    totals = c2p.agg(F.count(F.lit(1)).alias("n_types2p")).crossJoin(
-        toks.agg(F.countDistinct("w").alias("v_vocab"))
-    )
-    if totals.first()["n_types2p"] == 0:
-        raise ValueError(
-            "fit_kn3: training corpus has no trigrams — cannot estimate "
-            "a model"
-        )
-    return KN3Model(c3, ctx, c2p, mid, r3, totals)
-
-
-def score_docs_kn3(
-    docs: DataFrame,
-    model: KN3Model,
-    discount: float = DEFAULT_DISCOUNT,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    broadcast_unigrams: bool = True,
-    discounts3: "tuple[float, float, float] | None" = None,
-    discounts2: "tuple[float, float, float] | None" = None,
-) -> DataFrame:
-    """Per-document trigram-KN score against a FITTED model: (doc_id
-    [, is_train], n_triples, n_bo1 — triples absent from c3 —, n_bo2 —
-    continuation bigram absent too —, avg_nll, ppl), the
-    trigram_perplexity output contract with KN smoothing.  Docs under
-    3 tokens are absent.  Joins mirror trigram_perplexity: the triple
-    and context probes are honest shuffle joins on narrow keys
-    (corpus-sized tables), mid/r3 broadcast vocab-sized probes
-    (``broadcast_unigrams=False`` for web-scale vocabularies), totals
-    a 1-row broadcast.
-
-    MODIFIED Kneser-Ney (round-13, Chen & Goodman 1999 §3): pass
-    ``discounts3`` = (D1, D2, D3+) for the trigram level and
-    ``discounts2`` for the continuation-bigram level — the discount
-    then depends on the n-gram's own count (D1 for singletons, D2 for
-    doubletons, D3+ above), and λ(context) reassigns exactly the mass
-    removed: (D1·N1 + D2·N2 + D3+·N3+)/den over the per-context
-    count-of-count splits fit_kn3 stores.  With D1=D2=D3+=D the
-    formula reduces to the single-``discount`` form (equal rounded
-    outputs, pytest-locked; the λ sums associate differently at the
-    ulp level).  Derive the six numbers with
-    ``estimate_mkn_discounts`` (counts-of-counts) or pin literals."""
-    if (discounts3 is None) != (discounts2 is None):
-        raise ValueError(
-            "modified KN needs BOTH discounts3 and discounts2 (or neither)"
-        )
-    if discounts3 is not None:
-        for dk in (*discounts3, *discounts2):
-            if not 0.0 <= dk:
-                raise ValueError(f"modified discounts must be >= 0, got {dk}")
-        if "n1_ctx" not in model.ctx.columns:
-            raise ValueError(
-                "modified KN needs a model fit with count-of-count splits "
-                "(re-fit with this version's fit_kn3)"
-            )
-    elif not 0.0 < discount < 1.0:
-        raise ValueError(f"discount must be in (0, 1), got {discount}")
-    has_tag = "is_train" in docs.columns
-    # bind-staged _toks + triple array (VERDICT r16 ask #4)
-    staged = bind(
-        _bound_toks(docs, text_col), "_ta", token_triples(F.col("_toks"))
-    )
-    carry = ["is_train"] if has_tag else []
-    trips = staged.select(
-        id_col,
-        *carry,
-        F.explode(F.col("_ta")).alias("_t"),
-    ).select(
-        id_col, *carry,
-        F.col("_t.w1").alias("w1"),
-        F.col("_t.w2").alias("w2"),
-        F.col("_t.w3").alias("w3"),
-    )
-    # disjoint probe-key names (the trigram_perplexity convention):
-    # shared-lineage USING joins can collapse to a trivially-true
-    # equality — renamed keys + explicit conditions keep them honest
-    c3k = model.c3.select(
-        F.col("w1").alias("t1"), F.col("w2").alias("t2"),
-        F.col("w3").alias("t3"), "c3",
-    )
-    ctx_extra = (
-        ["n1_ctx", "n2_ctx", "n3p_ctx"]
-        if "n1_ctx" in model.ctx.columns
-        else []
-    )
-    mid_extra = (
-        ["n1_mid", "n2_mid", "n3p_mid"]
-        if "n1_mid" in model.mid.columns
-        else []
-    )
-    ctxk = model.ctx.select(
-        F.col("w1").alias("x1"), F.col("w2").alias("x2"),
-        "den12", "n1p_ctx", *ctx_extra,
-    )
-    c2pk = model.c2p.select(
-        F.col("w2").alias("b2"), F.col("w3").alias("b3"), "c2p"
-    )
-    midk = model.mid.select(
-        F.col("w2").alias("u2"), "den2p", "n1p_mid", *mid_extra
-    )
-    r3k = model.r3.select(F.col("w3").alias("u3"), "n1p_r3")
-    if broadcast_unigrams:
-        midk, r3k = F.broadcast(midk), F.broadcast(r3k)
-    scored = (
-        trips.join(
-            c3k,
-            (F.col("w1") == F.col("t1"))
-            & (F.col("w2") == F.col("t2"))
-            & (F.col("w3") == F.col("t3")),
-            "left",
-        )
-        .join(
-            ctxk,
-            (F.col("w1") == F.col("x1")) & (F.col("w2") == F.col("x2")),
-            "left",
-        )
-        .join(
-            c2pk,
-            (F.col("w2") == F.col("b2")) & (F.col("w3") == F.col("b3")),
-            "left",
-        )
-        .join(midk, F.col("w2") == F.col("u2"), "left")
-        .join(r3k, F.col("w3") == F.col("u3"), "left")
-        .crossJoin(F.broadcast(model.totals))
-        .select(
-            id_col,
-            *carry,
-            (
-                _kn3m_prob(discounts3, discounts2)
-                if discounts3 is not None
-                else _kn3_prob(discount)
-            ).alias("prob"),
-            F.when(F.col("c3").isNull(), F.lit(1)).otherwise(F.lit(0)).alias(
-                "bo1"
-            ),
-            F.when(
-                F.col("c3").isNull() & F.col("c2p").isNull(), F.lit(1)
-            ).otherwise(F.lit(0)).alias("bo2"),
-        )
-    )
-    tag_aggs = (
-        [F.max(F.col("is_train").cast("long")).alias("is_train")]
-        if has_tag
-        else []
-    )
-    return (
-        scored.groupBy(id_col)
-        .agg(
-            *tag_aggs,
-            F.count(F.lit(1)).alias("n_triples"),
-            F.sum("bo1").alias("n_bo1"),
-            F.sum("bo2").alias("n_bo2"),
-            F.round(F.avg(-F.log("prob")), 4).alias("avg_nll"),
-            F.round(F.exp(F.avg(-F.log("prob"))), 4).alias("ppl"),
-        )
-    )
-
-
-def kn3_perplexity(
-    docs: DataFrame,
-    train_frac: float = 0.8,
-    discount: float = DEFAULT_DISCOUNT,
-    seed: str = "lm",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    broadcast_unigrams: bool = True,
-    tagged: DataFrame | None = None,
-) -> DataFrame:
-    """Self-trained trigram interpolated Kneser-Ney (fit on the
-    md5-uniform train split, score every doc) — the order-3 extension
-    of ``kn_perplexity`` and the oracled face of fit_kn3 /
-    score_docs_kn3 (equality with the fit/score split on the same
-    split is pytest-locked).  See _kn3_prob for the three-leg formula
-    and fit_kn3 for the count-table shapes."""
-    if not 0.0 < discount < 1.0:
-        raise ValueError(f"discount must be in (0, 1), got {discount}")
-    if tagged is None:
-        tagged = with_train_split(docs, train_frac, seed=seed, id_col=id_col)
-    model = fit_kn3(
-        tagged.where(F.col("is_train")), id_col=id_col, text_col=text_col
-    )
-    return score_docs_kn3(
-        tagged,
-        model,
-        discount=discount,
-        id_col=id_col,
-        text_col=text_col,
-        broadcast_unigrams=broadcast_unigrams,
-    )
-
-
-def start_kn3_score_stream(
-    docs_stream: DataFrame,
-    model: "KN3Model",
-    out_dir: str,
-    checkpoint: str,
-    discount: float | None = None,
-    discounts3: "tuple[float, float, float] | None" = None,
-    discounts2: "tuple[float, float, float] | None" = None,
-):
-    """Score a DOCUMENT STREAM against a fitted trigram-KN model — the
-    order-3 twin of :func:`start_kn_score_stream` (round 13), same
-    stream-static scoring join per micro-batch, same
-    idempotent-by-path ``out_dir/batch_id=N`` sink, and the modified-
-    KN discounts ride through unchanged (batch parity with
-    ``score_docs_kn3`` pytest-locked)."""
-    d = DEFAULT_DISCOUNT if discount is None else discount
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        score_docs_kn3(
-            batch_df, model, discount=d,
-            discounts3=discounts3, discounts2=discounts2,
-        ).write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
-
-    return (
-        docs_stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_kn3_scores(spark, out_dir: str) -> DataFrame:
-    """All committed per-batch trigram-KN score partitions as one
-    frame.  Before the first commit: empty, not an error."""
-    import glob
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    if not glob.glob(os.path.join(out_dir, "batch_id=*", "*.parquet")):
-        return spark.createDataFrame(
-            [],
-            "doc_id long, n_triples long, n_bo1 long, n_bo2 long, "
-            "avg_nll double, ppl double",
-        )
-    return (
-        spark.read.option("basePath", out_dir)
-        .parquet(out_dir)
-        .drop("batch_id")
-    )
-
-
 # --------------------------------------------------------------------
-# Order-n Kneser-Ney (round-14, VERDICT r13 ask #3): the kn3 chain
-# generalized to arbitrary order — KenLM's production default is
-# 5-gram MODIFIED KN, and the count tables at every level are the
-# same hash-agg shape, so the generalization is a loop, not new
+# Order-n Kneser-Ney — the engine's one KN implementation, any order
+# >= 2 (Chen & Goodman 1999; KenLM's production default is 5-gram
+# MODIFIED KN).  KN's insight: a lower-order distribution weights a
+# word by how many DISTINCT contexts it continues, not by raw
+# frequency — 'Francisco' is frequent but continues only 'San', so it
+# gets a small continuation probability.  The count tables at every
+# level are the same hash-agg shape, so the order is a loop, not new
 # machinery.  Level k's counts for k < n are CONTINUATION counts
 # (distinct left-extensions at level k+1), level n's are raw; each
 # level carries its context's den / N1+ / count-of-count splits so
@@ -1555,7 +841,7 @@ def read_kn3_scores(spark, out_dir: str) -> DataFrame:
 # Scale: ONE corpus-sized n-tuple hash-agg; every lower level derives
 # by a groupBy over the level above (strictly shrinking tables);
 # scoring is n-1 left joins on narrow suffix keys + two broadcast
-# vocab-sized probes — the score_docs_kn3 shape in a loop.
+# vocab-sized probes.
 # --------------------------------------------------------------------
 def token_ngrams(toks: Column, n: int) -> Column:
     """Array of struct(w1..wn) adjacent n-grams; empty below n tokens
@@ -1579,8 +865,10 @@ class KNnModel:
     """A fitted order-n interpolated/modified-KN model: per-level
     count tables (raw at level n, continuation below), per-level
     context stats, the unigram continuation table and the (types₂, V)
-    scalar — KN3Model generalized (reference parity n/a: the
-    reference has no LM surface; this is ENGINE scope)."""
+    scalar (reference parity n/a: the reference has no LM surface;
+    this is ENGINE scope).  Persisted by ``save`` with a ``meta``
+    table carrying the order and count floors; ``load`` reads both
+    back from it."""
 
     def __init__(
         self,
@@ -1638,15 +926,14 @@ class KNnModel:
         ).write.mode("overwrite").parquet(f"{dir_path}/meta")
 
     @staticmethod
-    def load(spark, dir_path: str, order: int) -> "KNnModel":
+    def load(spark, dir_path: str) -> "KNnModel":
+        """Read a saved model back at the order recorded in its
+        ``meta`` — callers never name it, so continuation counts can't
+        be read as raw top-level counts.  A directory without ``meta``
+        (not written by ``save``) fails with Spark's path-not-found
+        read error."""
         meta = spark.read.parquet(f"{dir_path}/meta").first()
-        saved = meta["model_order"]
-        if saved != order:
-            raise ValueError(
-                f"KNnModel at {dir_path} was saved at order {saved}, "
-                f"load requested order {order} — a mismatched load would "
-                f"treat continuation counts as raw top-level counts"
-            )
+        order = meta["model_order"]
         # pre-r15 saves have no min_count column (full fit); r15 saves
         # have min_count only (top-level floor); r16+ saves carry the
         # full per-level map as JSON
@@ -1683,12 +970,12 @@ class KNnModel:
         min_count: "int | None" = None,
         min_counts: "dict[int, int] | None" = None,
     ) -> "KNnModel":
-        """Count-floor pruning (the KNModel/KN3Model convention):
-        pruned n-grams fall to the discounted-to-zero numerator but
-        keep their λ·P_{k-1} leg — stats/context tables stay computed
-        over the full training mass, so scores stay finite and
-        normalized.  The floor is recorded on the model (and in saved
-        meta) so consumers can tell a floored table from a full fit.
+        """Count-floor pruning: pruned n-grams fall to the
+        discounted-to-zero numerator but keep their λ·P_{k-1} leg —
+        stats/context tables stay computed over the full training
+        mass, so scores stay finite and normalized.  The floor is
+        recorded on the model (and in saved meta) so consumers can tell
+        a floored table from a full fit.
 
         ``min_counts`` (round 15 — the order-n count-table SCALE
         control, VERDICT r14 'missing' #5): per-LEVEL floors, KenLM's
@@ -1702,7 +989,7 @@ class KNnModel:
         level: ``pruned(min_counts={3: 5})`` floors ONLY level 3
         (ADVICE r15; the old default silently floored the top at 2).
         With no arguments at all, the top level floors at 2 (the
-        KNModel/KN3Model default).  When both name the top level,
+        BigramLM.pruned default).  When both name the top level,
         ``min_counts`` wins."""
         n = self.order
         if min_count is None and not min_counts:
@@ -1743,12 +1030,11 @@ def fit_knn(
     the deep derivation chain (n-1 count levels + n-1 context tables +
     r + totals all descend from ONE hash-agg) would otherwise make
     Catalyst re-inline the corpus-sized n-tuple explode+shuffle once
-    per consumer — the kn_perplexity '100 TB caveat', amplified by
-    depth at order 5 (measured ~15% wall at sf0.1 on the self-trained
-    entry; the re-derivation share grows with corpus size since the
-    explode is the per-byte cost).  The production path still persists
-    the model to parquet (KNnModel.save) — this only de-amplifies the
-    self-trained form."""
+    per consumer, amplified by depth at order 5 (measured ~15% wall
+    at sf0.1 on the self-trained entry; the re-derivation share grows
+    with corpus size since the explode is the per-byte cost).  The
+    production path still persists the model to parquet
+    (KNnModel.save) — this only de-amplifies the self-trained form."""
     n = order
 
     # the n-gram array rides the bind barrier: the explode's inferred
@@ -1814,11 +1100,19 @@ def fit_knn(
 
 
 def _knm_prob(order: int, discounts: "dict[int, tuple] | None", discount: float):
-    """The order-n KN probability Column, built bottom-up in the exact
-    association order the kn3 twins use (so a DuckDB twin replays the
-    IEEE arithmetic bit-for-bit).  ``discounts`` maps level k to its
-    (D1, D2, D3+) modified triple; None = single-D interpolated KN
-    with λ = D·N1+(ctx)/den."""
+    """The order-n KN probability Column, built bottom-up in a fixed
+    association order (so a DuckDB twin replays the IEEE arithmetic
+    bit-for-bit):
+
+        P1         = (N1+(·,w)+1) / (types₂ + V + 1)      continuation
+        Pk(w|ctx)  = max(ck−D(ck),0)/den(ctx) + λ(ctx)·P(k-1)
+                     or P(k-1) when ctx is unseen at level k
+
+    where ck are raw counts at the top level and continuation counts
+    below.  ``discounts`` maps level k to its (D1, D2, D3+) modified
+    triple, with λ(ctx) = (D1·N1(ctx) + D2·N2(ctx) + D3+·N3+(ctx)) /
+    den(ctx) reassigning exactly the removed mass; None = single-D
+    interpolated KN with λ = D·N1+(ctx)/den."""
     p = (F.coalesce(F.col("n1p_r"), F.lit(0)) + F.lit(1)) / (
         F.col("n_types2p") + F.col("v_vocab") + F.lit(1)
     )
@@ -1844,7 +1138,7 @@ def _knm_prob(order: int, discounts: "dict[int, tuple] | None", discount: float)
     return p
 
 
-def score_docs_knn(
+def _knn_grams(
     docs: DataFrame,
     model: KNnModel,
     discount: float = DEFAULT_DISCOUNT,
@@ -1854,18 +1148,20 @@ def score_docs_knn(
     broadcast_unigrams: bool = True,
     broadcast_bigrams: bool = False,
 ) -> DataFrame:
-    """Per-document order-n KN score against a fitted model: (doc_id
-    [, is_train], n_grams, n_bo — positions whose full-order n-gram is
-    absent from the model —, avg_nll, ppl).  Docs under n tokens are
-    absent.  Joins: level-k count and context probes on renamed
-    suffix keys (the disjoint-key discipline of score_docs_kn3);
-    1-word-keyed tables broadcast when ``broadcast_unigrams``.  The
-    level-2 COUNT table is pair-keyed (the raw corpus bigram table at
-    order 2) and therefore corpus-sized at web scale — it stays a
-    shuffle join unless ``broadcast_bigrams`` is set explicitly; at
-    small scale AQE's runtime join re-optimization converts it to a
-    broadcast join from the REAL table size, which is the size guard a
-    plan-time ``F.broadcast`` hint would bypass."""
+    """The per-gram frame behind :func:`score_docs_knn`: one row per
+    order-n doc position with (doc_id [, is_train], prob, c2..cn) —
+    the position's probability and each level's probed count (NULL
+    where that level's gram is absent from the model).  Joins:
+    level-k count and context probes on renamed suffix keys (shared-
+    lineage USING joins can collapse to a trivially-true equality —
+    renamed keys + explicit conditions keep them honest); 1-word-keyed
+    tables broadcast when ``broadcast_unigrams``.  The level-2 COUNT
+    table is pair-keyed (the raw corpus bigram table at order 2) and
+    therefore corpus-sized at web scale — it stays a shuffle join
+    unless ``broadcast_bigrams`` is set explicitly; at small scale
+    AQE's runtime join re-optimization converts it to a broadcast join
+    from the REAL table size, which is the size guard a plan-time
+    ``F.broadcast`` hint would bypass."""
     n = model.order
     if discounts is not None:
         missing = [k for k in range(2, n + 1) if k not in discounts]
@@ -1877,8 +1173,7 @@ def score_docs_knn(
                     raise ValueError(f"discounts must be >= 0, got {dk}")
     elif not 0.0 < discount < 1.0:
         raise ValueError(f"discount must be in (0, 1), got {discount}")
-    has_tag = "is_train" in docs.columns
-    carry = ["is_train"] if has_tag else []
+    carry = ["is_train"] if "is_train" in docs.columns else []
     # bind barrier on the doc-side n-gram array (see fit_knn)
     staged = bind(
         _bound_toks(docs, text_col),
@@ -1924,17 +1219,52 @@ def score_docs_knn(
     out = out.join(rk, F.col(f"g{n}") == F.col("u_r"), "left").crossJoin(
         F.broadcast(model.totals)
     )
-    scored = out.select(
+    return out.select(
         id_col,
         *carry,
         _knm_prob(n, discounts, discount).alias("prob"),
+        *[f"c{k}" for k in range(2, n + 1)],
+    )
+
+
+def score_docs_knn(
+    docs: DataFrame,
+    model: KNnModel,
+    discount: float = DEFAULT_DISCOUNT,
+    discounts: "dict[int, tuple] | None" = None,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    broadcast_unigrams: bool = True,
+    broadcast_bigrams: bool = False,
+) -> DataFrame:
+    """Per-document order-n KN score against a fitted model: (doc_id
+    [, is_train], n_grams, n_bo — positions whose full-order n-gram is
+    absent from the model —, avg_nll, ppl), rounded at 4 so both
+    engines hash identically.  Docs under n tokens are absent.  The
+    join shape is :func:`_knn_grams`'s."""
+    n = model.order
+    grams = _knn_grams(
+        docs,
+        model,
+        discount=discount,
+        discounts=discounts,
+        id_col=id_col,
+        text_col=text_col,
+        broadcast_unigrams=broadcast_unigrams,
+        broadcast_bigrams=broadcast_bigrams,
+    )
+    carry = ["is_train"] if "is_train" in docs.columns else []
+    scored = grams.select(
+        id_col,
+        *carry,
+        "prob",
         F.when(F.col(f"c{n}").isNull(), F.lit(1))
         .otherwise(F.lit(0))
         .alias("bo"),
     )
     tag_aggs = (
         [F.max(F.col("is_train").cast("long")).alias("is_train")]
-        if has_tag
+        if carry
         else []
     )
     return scored.groupBy(id_col).agg(
@@ -1960,9 +1290,13 @@ def knn_perplexity(
     tagged: DataFrame | None = None,
 ) -> DataFrame:
     """Self-trained order-n (modified) Kneser-Ney: fit on the
-    md5-uniform train split, score every doc — kn3_perplexity
-    generalized; order=5 with per-level discount triples is the
-    production KenLM shape."""
+    md5-uniform train split, score every doc.  order=2 with the single
+    default discount is interpolated bigram KN (Chen & Goodman 1998
+    §2.7); order=5 with per-level discount triples is the production
+    KenLM shape.  Callers that need a custom train membership pass
+    their own ``tagged`` frame carrying an is_train boolean — or use
+    fit_knn/score_docs_knn directly for the train-once/score-many
+    shape."""
     if tagged is None:
         tagged = with_train_split(docs, train_frac, seed=seed, id_col=id_col)
     model = fit_knn(
@@ -1980,54 +1314,4 @@ def knn_perplexity(
         text_col=text_col,
         broadcast_unigrams=broadcast_unigrams,
         broadcast_bigrams=broadcast_bigrams,
-    )
-
-
-def start_knn_score_stream(
-    docs_stream: DataFrame,
-    model: "KNnModel",
-    out_dir: str,
-    checkpoint: str,
-    discount: float | None = None,
-    discounts: "dict[int, tuple] | None" = None,
-):
-    """Score a DOCUMENT STREAM against a fitted order-n KN model —
-    the order-n member of the score-stream family (lm / kn / kn3):
-    same stream-static scoring join per micro-batch, same
-    idempotent-by-path ``out_dir/batch_id=N`` sink; per-level modified
-    discounts ride through unchanged (batch parity with
-    ``score_docs_knn`` pytest-locked)."""
-    d = DEFAULT_DISCOUNT if discount is None else discount
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        score_docs_knn(
-            batch_df, model, discount=d, discounts=discounts
-        ).write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
-
-    return (
-        docs_stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_knn_scores(spark, out_dir: str) -> DataFrame:
-    """All committed per-batch order-n KN score partitions as one
-    frame.  Before the first commit: empty, not an error."""
-    import glob
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    if not glob.glob(os.path.join(out_dir, "batch_id=*", "*.parquet")):
-        return spark.createDataFrame(
-            [],
-            "doc_id long, n_grams long, n_bo long, "
-            "avg_nll double, ppl double",
-        )
-    return (
-        spark.read.option("basePath", out_dir)
-        .parquet(out_dir)
-        .drop("batch_id")
     )

@@ -239,15 +239,27 @@ KN_DISCOUNT = 0.75
 
 def q_kn_perplexity(spark, sf_dir):
     """Per-document bigram perplexity under interpolated Kneser-Ney
-    smoothing (operators/lm.kn_perplexity) — the continuation-count
-    smoothing family next to the catalog's Stupid-Backoff entries;
-    same md5-uniform train split, same rounded (avg_nll, ppl)
-    contract."""
-    from prod2vec_spark.operators.lm import kn_perplexity
+    smoothing (operators/lm.knn_perplexity at order=2) — the
+    continuation-count smoothing family next to the catalog's
+    Stupid-Backoff entries; same md5-uniform train split, same rounded
+    (avg_nll, ppl) contract.  The order-n report's n_grams/n_bo are
+    this entry's n_pairs/n_unseen."""
+    from prod2vec_spark.operators.lm import knn_perplexity
 
     docs = read_table(spark, sf_dir, "documents")
-    return kn_perplexity(
-        docs, train_frac=KN_TRAIN_FRAC, discount=KN_DISCOUNT, seed="lm"
+    return knn_perplexity(
+        docs,
+        order=2,
+        train_frac=KN_TRAIN_FRAC,
+        discount=KN_DISCOUNT,
+        seed="lm",
+    ).select(
+        "doc_id",
+        "is_train",
+        F.col("n_grams").alias("n_pairs"),
+        F.col("n_bo").alias("n_unseen"),
+        "avg_nll",
+        "ppl",
     )
 
 

@@ -5,8 +5,8 @@ reference has no media surface — SURVEY.md §2.21):
   plane, completing the span triad (video frames / image tiles / audio
   windows), fixture-split like the image plane (queries_r12.py).
 * ``kn3_perplexity`` — TRIGRAM interpolated Kneser-Ney scoring
-  (operators/lm.kn3_perplexity, VERDICT r12 ask #3): three-leg
-  interpolation through continuation-count lower orders; the DuckDB
+  (operators/lm order-n KN at order 3): three-leg interpolation
+  through continuation-count lower orders; the DuckDB
   twin replays the chain operand-for-operand in Spark's association
   order so the IEEE arithmetic hashes identically (the r12
   kn_perplexity convention, one order deeper).
@@ -244,18 +244,46 @@ KN_TRAIN_FRAC = 0.8
 KN_DISCOUNT = 0.75
 
 
-def q_kn3_perplexity(spark, sf_dir):
-    """Per-document TRIGRAM perplexity under interpolated Kneser-Ney
-    smoothing (operators/lm.kn3_perplexity, VERDICT r12 ask #3) — the
-    order-3 extension of the round-12 kn_perplexity entry: three-leg
-    interpolation through continuation-count lower orders, same
-    md5-uniform train split, same rounded (avg_nll, ppl) contract."""
-    from prod2vec_spark.operators.lm import kn3_perplexity
+def _kn3_report(spark, sf_dir, **discounts):
+    """Self-trained order-3 KN report (operators/lm.fit_knn on the
+    md5-uniform train split, every doc scored): (doc_id, is_train,
+    n_triples, n_bo1 — triples absent from the model —, n_bo2 — the
+    continuation bigram absent too —, avg_nll, ppl).  The two backoff
+    depths come from the per-gram frame's level-3 and level-2 counts,
+    which score_docs_knn's n_bo alone does not split."""
+    from prod2vec_spark.operators.lm import (
+        _knn_grams,
+        fit_knn,
+        with_train_split,
+    )
 
     docs = read_table(spark, sf_dir, "documents")
-    return kn3_perplexity(
-        docs, train_frac=KN_TRAIN_FRAC, discount=KN_DISCOUNT, seed="lm"
+    tagged = with_train_split(docs, KN_TRAIN_FRAC, seed="lm")
+    model = fit_knn(tagged.where(F.col("is_train")), order=3)
+    nll = F.avg(-F.log("prob"))
+    return (
+        _knn_grams(tagged, model, **discounts)
+        .groupBy("doc_id")
+        .agg(
+            F.max(F.col("is_train").cast("long")).alias("is_train"),
+            F.count(F.lit(1)).alias("n_triples"),
+            F.sum(F.col("c3").isNull().cast("long")).alias("n_bo1"),
+            F.sum(
+                (F.col("c3").isNull() & F.col("c2").isNull()).cast("long")
+            ).alias("n_bo2"),
+            F.round(nll, 4).alias("avg_nll"),
+            F.round(F.exp(nll), 4).alias("ppl"),
+        )
     )
+
+
+def q_kn3_perplexity(spark, sf_dir):
+    """Per-document TRIGRAM perplexity under interpolated Kneser-Ney
+    smoothing (operators/lm.fit_knn at order 3) — the order-3
+    extension of the round-12 kn_perplexity entry: three-leg
+    interpolation through continuation-count lower orders, same
+    md5-uniform train split, same rounded (avg_nll, ppl) contract."""
+    return _kn3_report(spark, sf_dir, discount=KN_DISCOUNT)
 
 
 def _sql_kn3_perplexity() -> str:
@@ -464,19 +492,9 @@ def q_kn3m_perplexity(spark, sf_dir):
     (Chen & Goodman 1999 §3: count-dependent discounts D1/D2/D3+ per
     level, λ reassigning exactly the removed mass through per-context
     count-of-count splits) — fit on the md5-uniform train split, score
-    every doc (operators/lm.fit_kn3 + score_docs_kn3(discounts3=…))."""
-    from prod2vec_spark.operators.lm import (
-        fit_kn3,
-        score_docs_kn3,
-        with_train_split,
-    )
-
-    docs = read_table(spark, sf_dir, "documents")
-    tagged = with_train_split(docs, KN_TRAIN_FRAC, seed="lm")
-    model = fit_kn3(tagged.where(F.col("is_train")))
-    return score_docs_kn3(
-        tagged, model, discounts3=KN3M_D3, discounts2=KN3M_D2
-    )
+    every doc (operators/lm.fit_knn at order 3 with per-level
+    discounts)."""
+    return _kn3_report(spark, sf_dir, discounts={3: KN3M_D3, 2: KN3M_D2})
 
 
 def _sql_kn3m_perplexity() -> str:

@@ -61,3 +61,14 @@ def list_artifacts(spark: SparkSession, dir_path: str) -> list[str]:
     return sorted(
         st.getPath().getName() for st in fs.listStatus(hpath)
     )
+
+
+def batch_partials_exist(spark: SparkSession, dir_path: str) -> bool:
+    """Whether ``dir_path`` holds a committed ``batch_id=N`` parquet
+    partial — the probe the idempotent per-batch sinks' readers run
+    before reading.  Goes through the Hadoop FileSystem like every
+    artifact here, so a ``file://``, ``s3a://`` or ``hdfs://`` dir is
+    probed where it lives instead of as a local path."""
+    fs, hpath = _fs_path(spark, f"{dir_path}/batch_id=*/*.parquet")
+    hits = fs.globStatus(hpath)
+    return hits is not None and len(hits) > 0

@@ -240,12 +240,13 @@ def start_near_dedup_registry(
 def read_band_registry(spark, registry_dir: str) -> DataFrame:
     """The committed first-presenter signature registry (union of
     per-batch partials) with its batch_id partition column — empty
-    before the first commit, never an error."""
-    import glob
-    import os
+    before the first commit, never an error.  The probe goes through
+    the Hadoop FileSystem: a local glob would miss the partials of a
+    ``file://`` or remote registry and silently drop earlier-batch
+    ownership."""
+    from prod2vec_spark.sources.artifacts import batch_partials_exist
 
-    os.makedirs(registry_dir, exist_ok=True)
-    if not glob.glob(os.path.join(registry_dir, "batch_id=*", "*.parquet")):
+    if not batch_partials_exist(spark, registry_dir):
         return spark.createDataFrame(
             [], "band_id int, band_sig string, owner long, batch_id long"
         )

@@ -62,16 +62,28 @@ def assert_oracle_match(spark, duck, query_fn, sql, sf_dir=SF_ORACLE, float_tol=
             )
 
 
+def _selects_slow(markexpr: str) -> bool:
+    """Whether a ``-m`` expression asks for the slow tests: it names
+    ``slow`` other than as ``not slow``."""
+    import re
+
+    positive = re.sub(r"\bnot\s+slow\b", "", markexpr)
+    return re.search(r"\bslow\b", positive) is not None
+
+
 def pytest_collection_modifyitems(config, items):
     """VERDICT r16 ask #3: the full suite outgrew the grading driver's
     verify window (r16: tests_ok false, dots-only tail at ~80%), so
     long e2e/replay/planted-family tests carry @pytest.mark.slow and
     are SKIPPED by default — the default `pytest tests/ -x -q` is the
     driver-budget suite.  SPARK_GRAFT_SLOW_TESTS=1 runs everything
-    (the full run is recorded per round in OPTIMIZATION_r*.md)."""
+    (the full run is recorded per round in OPTIMIZATION_r*.md), and an
+    explicit ``-m slow`` selection runs the slow tests it selects."""
     import os
 
-    if os.environ.get("SPARK_GRAFT_SLOW_TESTS"):
+    if os.environ.get("SPARK_GRAFT_SLOW_TESTS") or _selects_slow(
+        config.getoption("markexpr", "") or ""
+    ):
         return
     skip = pytest.mark.skip(
         reason="slow suite (set SPARK_GRAFT_SLOW_TESTS=1 to run)"

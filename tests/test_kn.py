@@ -1,7 +1,8 @@
-"""Interpolated Kneser-Ney bigram scoring (round 12,
-operators/lm.kn_perplexity) — hand-computed probabilities, the
-unseen-left fallback, the continuation-count property that motivates
-KN, and validation errors."""
+"""Kneser-Ney scoring (operators/lm order-n KN: fit_knn /
+score_docs_knn / knn_perplexity) — hand-computed probabilities at
+orders 2, 3 and 5, the unseen-left fallback, the continuation-count
+property that motivates KN, modified discounts, pruning, persistence
+and validation errors."""
 
 from __future__ import annotations
 
@@ -12,31 +13,33 @@ import pytest
 pytestmark = pytest.mark.slow  # e2e/replay file: driver-budget suite skips it (conftest hook)
 from pyspark.sql import functions as F
 
-from prod2vec_spark.operators.lm import kn_perplexity
+from prod2vec_spark.operators.lm import fit_knn, knn_perplexity, score_docs_knn
 
 D = 0.75
 
 
 def test_kn_hand_computed_probabilities(spark):
-    """Train 'a b a b': c2={(a,b):2,(b,a):1}; den(a)=2, den(b)=1,
-    N1+(a,.)=N1+(b,.)=1, N1+(.,a)=N1+(.,b)=1; n_types=2, V=2 →
-    continuation denominator 5, pcont(a)=pcont(b)=0.4, pcont(zz)=0.2.
-    Held-out 'b b zz': (b,b) → 0 + 0.75·1/1·0.4 = 0.3; (b,zz) →
-    0.75·0.2 = 0.15.  Train doc replays its own discounted mass."""
+    """Order 2.  Train 'a b a b': c2={(a,b):2,(b,a):1}; den(a)=2,
+    den(b)=1, N1+(a,.)=N1+(b,.)=1, N1+(.,a)=N1+(.,b)=1; n_types=2,
+    V=2 → continuation denominator 5, pcont(a)=pcont(b)=0.4,
+    pcont(zz)=0.2.  Held-out 'b b zz': (b,b) → 0 + 0.75·1/1·0.4 = 0.3;
+    (b,zz) → 0.75·0.2 = 0.15.  Train doc replays its own discounted
+    mass."""
     tagged = spark.createDataFrame(
         [(1, "a b a b", True), (2, "b b zz", False)],
         "doc_id long, text string, is_train boolean",
     )
     out = {
-        r["doc_id"]: r for r in kn_perplexity(tagged, tagged=tagged).collect()
+        r["doc_id"]: r
+        for r in knn_perplexity(tagged, order=2, tagged=tagged).collect()
     }
     r2 = out[2]
     assert r2["is_train"] == 0
-    assert r2["n_unseen"] == r2["n_pairs"] == 2
+    assert r2["n_bo"] == r2["n_grams"] == 2
     assert r2["avg_nll"] == round(-(math.log(0.3) + math.log(0.15)) / 2, 4)
     # doc 1: (a,b)=1.25/2+0.375·0.4=0.775 twice, (b,a)=0.25+0.75·0.4=0.55
     r1 = out[1]
-    assert r1["n_unseen"] == 0
+    assert r1["n_bo"] == 0
     assert r1["avg_nll"] == round(
         -(2 * math.log(0.775) + math.log(0.55)) / 3, 4
     )
@@ -51,7 +54,8 @@ def test_kn_unseen_left_context_falls_to_continuation(spark):
         "doc_id long, text string, is_train boolean",
     )
     out = {
-        r["doc_id"]: r for r in kn_perplexity(tagged, tagged=tagged).collect()
+        r["doc_id"]: r
+        for r in knn_perplexity(tagged, order=2, tagged=tagged).collect()
     }
     # pcont(b) = 0.4, pcont(zz) = 0.2 (hand computation above)
     assert out[2]["avg_nll"] == round(-math.log(0.4), 4)
@@ -76,20 +80,10 @@ def test_kn_continuation_beats_raw_frequency(spark):
         "doc_id long, text string, is_train boolean",
     )
     out = {
-        r["doc_id"]: r for r in kn_perplexity(tagged, tagged=tagged).collect()
+        r["doc_id"]: r
+        for r in knn_perplexity(tagged, order=2, tagged=tagged).collect()
     }
     assert out[3]["avg_nll"] < out[2]["avg_nll"]
-
-
-def test_kn_validation_errors(spark):
-    docs = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="discount"):
-        kn_perplexity(docs, discount=1.5)
-    empty = spark.createDataFrame(
-        [(1, "solo", False)], "doc_id long, text string, is_train boolean"
-    )
-    with pytest.raises(ValueError, match="no bigrams"):
-        kn_perplexity(empty, tagged=empty)
 
 
 def test_kn_by_lang_models_are_independent(spark):
@@ -137,14 +131,14 @@ def test_kn_by_lang_models_are_independent(spark):
         ],
         "doc_id long, text string, lang string, is_train boolean",
     )
-    from prod2vec_spark.operators.lm import kn_perplexity
-
-    en = kn_perplexity(
+    en = knn_perplexity(
         tagged2.where(F.col("lang") == "en"),
+        order=2,
         tagged=tagged2.where(F.col("lang") == "en"),
     )
-    de = kn_perplexity(
+    de = knn_perplexity(
         tagged2.where(F.col("lang") == "de"),
+        order=2,
         tagged=tagged2.where(F.col("lang") == "de"),
     )
     ppl_en = {r["doc_id"]: r["ppl"] for r in en.collect()}[12]
@@ -152,58 +146,17 @@ def test_kn_by_lang_models_are_independent(spark):
     assert ppl_en != ppl_de  # same text, different per-lang model
 
 
-def test_kn_fit_score_split_matches_self_trained(spark, tmp_path):
-    """The production path (fit_kn → KNModel.save → load →
-    score_docs_kn) reproduces the self-trained kn_perplexity output
-    row-for-row on the same split — and the pruned model degrades a
-    pruned pair to the λ·P_cont leg while keeping every score finite
-    (totals/continuation stats unchanged, the BigramLM.pruned
-    contract)."""
-    from prod2vec_spark.operators.lm import (
-        KNModel,
-        fit_kn,
-        kn_perplexity,
-        score_docs_kn,
-        with_train_split,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(
-            ["a b a b c", "b c b a", "a a a b", "c b a", "zz b a c"]
-        )],
-        "doc_id long, text string",
-    )
-    tagged = with_train_split(docs, 0.6, seed="kn-split")
-    want = sorted(
-        map(tuple, kn_perplexity(docs, tagged=tagged).collect())
-    )
-    model = fit_kn(tagged.where(F.col("is_train")))
-    model.save(str(tmp_path / "kn"))
-    loaded = KNModel.load(spark, str(tmp_path / "kn"))
-    got = sorted(map(tuple, score_docs_kn(tagged, loaded).collect()))
-    assert got == want
-
-    # pruning: a floor above every count empties c2 → every pair is
-    # 'unseen', scores stay finite via the continuation leg
-    hard = loaded.pruned(min_count=10_000)
-    rows = score_docs_kn(tagged, hard).collect()
-    assert rows and all(r["n_unseen"] == r["n_pairs"] for r in rows)
-    assert all(math.isfinite(r["avg_nll"]) for r in rows)
-    with pytest.raises(ValueError, match="no bigrams"):
-        fit_kn(docs.where(F.lit(False)))
-
-
 def test_kn_corpus_scoring_finite(spark):
     from tests.conftest import SF_SMOKE
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    rows = kn_perplexity(docs).collect()
+    rows = knn_perplexity(docs, order=2).collect()
     assert rows
     held = [r for r in rows if r["is_train"] == 0]
     assert held, "split should leave held-out docs at sf0.001"
     for r in rows:
         assert r["ppl"] >= 1.0 and math.isfinite(r["avg_nll"])
-        assert r["n_unseen"] <= r["n_pairs"]
+        assert r["n_bo"] <= r["n_grams"]
     # sanity vs the Stupid-Backoff twin: same doc coverage
     from prod2vec_spark.operators.lm import lm_perplexity
 
@@ -211,7 +164,7 @@ def test_kn_corpus_scoring_finite(spark):
     assert sb.count() == len(rows)
 
 
-# ------------------------------------------ round-13: trigram KN
+# ------------------------------------------------------ order-3 KN
 def test_kn3_hand_computed_three_leg_chain(spark):
     """VERDICT r12 ask #3's 'hand-computed three-leg chain': train
     'a b c a b c' + 'a b d' → c3={(a,b,c):2,(b,c,a):1,(c,a,b):1,
@@ -222,7 +175,7 @@ def test_kn3_hand_computed_three_leg_chain(spark):
     P3=1.25/3+(0.75·2/3)·7/24=9/16.  Held-out (b,c,d): triple AND
     continuation bigram unseen but ctx(b,c) exists → P2=0+0.75·2/9=1/6,
     P3=0+0.75·1/6=1/8.  Held-out (d,d,d): no ctx, no mid → P1=2/9."""
-    from prod2vec_spark.operators.lm import kn3_perplexity
+    from prod2vec_spark.operators.lm import _knn_grams
 
     tagged = spark.createDataFrame(
         [(1, "a b c a b c", True), (2, "a b d", True),
@@ -231,14 +184,25 @@ def test_kn3_hand_computed_three_leg_chain(spark):
     )
     out = {
         r["doc_id"]: r
-        for r in kn3_perplexity(tagged, discount=0.75, tagged=tagged).collect()
+        for r in knn_perplexity(
+            tagged, order=3, discount=0.75, tagged=tagged
+        ).collect()
     }
     assert out[3]["avg_nll"] == round(-math.log(9 / 16), 4)
-    assert out[3]["n_bo1"] == 0 and out[3]["n_bo2"] == 0
+    assert out[3]["n_bo"] == 0
     assert out[4]["avg_nll"] == round(-math.log(1 / 8), 4)
-    assert out[4]["n_bo1"] == 1 and out[4]["n_bo2"] == 1
+    assert out[4]["n_bo"] == 1
     assert out[5]["avg_nll"] == round(-math.log(2 / 9), 4)
     assert out[5]["ppl"] == round(9 / 2, 4)
+    # backoff depth from the per-gram frame: (a,b,c) is seen at both
+    # levels; (b,c,d) misses the trigram AND the continuation bigram
+    model = fit_knn(tagged.where(F.col("is_train")), order=3)
+    depth = {
+        r["doc_id"]: (r["c3"] is None, r["c3"] is None and r["c2"] is None)
+        for r in _knn_grams(tagged, model, discount=0.75).collect()
+    }
+    assert depth[3] == (False, False)
+    assert depth[4] == (True, True)
     # two-token doc is absent (no triples), the trigram convention
     short = spark.createDataFrame(
         [(9, "x y", False)], "doc_id long, text string, is_train boolean"
@@ -246,58 +210,23 @@ def test_kn3_hand_computed_three_leg_chain(spark):
     both = tagged.unionByName(short)
     assert 9 not in {
         r["doc_id"]
-        for r in kn3_perplexity(both, discount=0.75, tagged=both).collect()
+        for r in knn_perplexity(
+            both, order=3, discount=0.75, tagged=both
+        ).collect()
     }
-
-
-def test_kn3_fit_score_split_matches_self_trained(spark, tmp_path):
-    """The train-once/score-many contract at order 3: fit_kn3 +
-    score_docs_kn3 reproduce kn3_perplexity bit-for-bit on the same
-    split, and a save/load roundtrip through parquet changes nothing
-    (the KNModel pattern)."""
-    from prod2vec_spark.operators.lm import (
-        KN3Model,
-        fit_kn3,
-        kn3_perplexity,
-        score_docs_kn3,
-    )
-    from prod2vec_spark.sources.io import read_table
-    from tests.conftest import SF_SMOKE
-
-    docs = read_table(spark, SF_SMOKE, "documents").limit(120)
-    from prod2vec_spark.operators.lm import with_train_split
-
-    tagged = with_train_split(docs, 0.8, seed="lm")
-    want = {
-        r["doc_id"]: r.asDict()
-        for r in kn3_perplexity(docs, tagged=tagged).collect()
-    }
-    model = fit_kn3(tagged.where(F.col("is_train")))
-    got = {
-        r["doc_id"]: r.asDict()
-        for r in score_docs_kn3(tagged, model).collect()
-    }
-    assert got == want
-    model.save(str(tmp_path / "kn3"))
-    loaded = KN3Model.load(spark, str(tmp_path / "kn3"))
-    got2 = {
-        r["doc_id"]: r.asDict()
-        for r in score_docs_kn3(tagged, loaded).collect()
-    }
-    assert got2 == want
 
 
 def test_kn3_discount_estimated_from_counts_of_counts(spark):
     """Ney-Essen-Kneser D = n1/(n1+2·n2) as a CHECKED number: the toy
     c3 table has n1=3 singletons and n2=1 doubleton → D = 3/5; a
     singleton-free table falls back to the standard 0.75."""
-    from prod2vec_spark.operators.lm import estimate_discount, fit_kn3
+    from prod2vec_spark.operators.lm import estimate_discount
 
     train = spark.createDataFrame(
         [(1, "a b c a b c"), (2, "a b d")], "doc_id long, text string"
     )
-    model = fit_kn3(train)
-    assert estimate_discount(model.c3, "c3") == pytest.approx(0.6)
+    model = fit_knn(train, order=3)
+    assert estimate_discount(model.counts[3], "c3") == pytest.approx(0.6)
     one_singleton = spark.createDataFrame(
         [(1, 1), (2, 2), (3, 2)], "k long, c3 long"
     )
@@ -312,33 +241,18 @@ def test_kn3_pruned_keeps_interpolation_mass(spark):
     """Pruning the trigram table floors the discounted numerator but
     keeps the λ·P2 leg (stats computed over full training mass): a
     pruned singleton scores exactly its interpolation legs."""
-    from prod2vec_spark.operators.lm import fit_kn3, score_docs_kn3
-
     train = spark.createDataFrame(
         [(1, "a b c a b c"), (2, "a b d")], "doc_id long, text string"
     )
-    model = fit_kn3(train).pruned(min_count=2)
+    model = fit_knn(train, order=3).pruned(min_count=2)
     test = spark.createDataFrame([(7, "a b d")], "doc_id long, text string")
-    r = score_docs_kn3(test, model, discount=0.75).first()
+    r = score_docs_knn(test, model, discount=0.75).first()
     # (a,b,d): c3 pruned -> numerator 0, ctx/mid/r3 intact:
-    # P1(d)=2/9, P2(b,d)=0.25/2+0.75·2/9 = 7/24... wait c2p(b,d)=1:
+    # P1(d)=2/9, c2p(b,d)=1:
     # P2 = max(1-.75,0)/2 + (.75·2/2)·(2/9) = 1/8 + 1/6 = 7/24
     # P3 = 0/3 + (.75·2/3)·(7/24) = 7/48
-    assert r["n_bo1"] == 1  # pruned triple counts as backed-off
+    assert r["n_bo"] == 1  # pruned triple counts as backed-off
     assert r["avg_nll"] == round(-math.log(7 / 48), 4)
-
-
-def test_kn3_validation_errors(spark):
-    from prod2vec_spark.operators.lm import fit_kn3, kn3_perplexity, score_docs_kn3
-
-    docs = spark.createDataFrame(
-        [(1, "a b c", True)], "doc_id long, text string, is_train boolean"
-    )
-    with pytest.raises(ValueError, match="discount"):
-        kn3_perplexity(docs, discount=1.5, tagged=docs)
-    short = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="no trigrams"):
-        fit_kn3(short)
 
 
 # ------------------------------------- round-13: MODIFIED Kneser-Ney
@@ -348,47 +262,42 @@ def test_mkn_hand_computed_probabilities(spark):
     held-out (a,b,c) → num=(4−D3+)/5=0.48, λ12=(0.5·1+1.6·1)/5=0.42,
     P2(b,c)=(1−0.4)/2+0.4·P1(c)=0.38 with P1(c)=2/10 → P3=0.6396;
     held-out (b,c,d) → (1−0.5)/4 + (2.1/4)·(0.3+0.4·0.3) = 0.3455."""
-    import math
-
-    from prod2vec_spark.operators.lm import fit_kn3, score_docs_kn3
-
     train = spark.createDataFrame(
         [(1, "a b c a b c a b c"), (2, "a b d"), (3, "b c a b c d")],
         "doc_id long, text string",
     )
-    model = fit_kn3(train)
+    model = fit_knn(train, order=3)
     test = spark.createDataFrame(
         [(7, "a b c"), (8, "b c d")], "doc_id long, text string"
     )
     out = {
         r["doc_id"]: r
-        for r in score_docs_kn3(
+        for r in score_docs_knn(
             test, model,
-            discounts3=(0.5, 1.1, 1.6), discounts2=(0.4, 0.9, 1.3),
+            discounts={3: (0.5, 1.1, 1.6), 2: (0.4, 0.9, 1.3)},
         ).collect()
     }
     assert out[7]["avg_nll"] == round(-math.log(0.6396), 4)
     assert out[8]["avg_nll"] == round(-math.log(0.3455), 4)
-    assert out[8]["n_bo1"] == 0  # (b,c,d) IS in the trigram table
+    assert out[8]["n_bo"] == 0  # (b,c,d) IS in the trigram table
 
 
 def test_mkn_uniform_discounts_reduce_to_single_d(spark):
     """With D1=D2=D3+=D the modified formula reduces to the single-D
     form — equal rounded outputs on a real corpus slice."""
-    from prod2vec_spark.operators.lm import fit_kn3, score_docs_kn3
     from prod2vec_spark.sources.io import read_table
     from tests.conftest import SF_SMOKE
 
     docs = read_table(spark, SF_SMOKE, "documents").limit(150)
-    model = fit_kn3(docs)
+    model = fit_knn(docs, order=3)
     single = {
         r["doc_id"]: r.asDict()
-        for r in score_docs_kn3(docs, model, discount=0.75).collect()
+        for r in score_docs_knn(docs, model, discount=0.75).collect()
     }
     uniform = {
         r["doc_id"]: r.asDict()
-        for r in score_docs_kn3(
-            docs, model, discounts3=(0.75,) * 3, discounts2=(0.75,) * 3
+        for r in score_docs_knn(
+            docs, model, discounts={3: (0.75,) * 3, 2: (0.75,) * 3}
         ).collect()
     }
     assert uniform == single
@@ -410,38 +319,6 @@ def test_mkn_discounts_estimated_from_counts_of_counts(spark):
     no_n2 = spark.createDataFrame([(1, 1), (2, 3)], "k long, c long")
     assert estimate_mkn_discounts(no_n2, "c") == (0.75, 0.75, 0.75)
 
-
-def test_mkn_validation_errors(spark):
-    from prod2vec_spark.operators.lm import (
-        KN3Model,
-        fit_kn3,
-        score_docs_kn3,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "a b c d e")], "doc_id long, text string"
-    )
-    model = fit_kn3(docs)
-    with pytest.raises(ValueError, match="BOTH"):
-        score_docs_kn3(docs, model, discounts3=(0.5, 1.1, 1.6))
-    with pytest.raises(ValueError, match=">= 0"):
-        score_docs_kn3(
-            docs, model, discounts3=(-0.1, 1, 1), discounts2=(0.4, 0.9, 1.3)
-        )
-    # a legacy model without the count-of-count splits refuses loudly
-    legacy = KN3Model(
-        model.c3,
-        model.ctx.select("w1", "w2", "den12", "n1p_ctx"),
-        model.c2p,
-        model.mid.select("w2", "den2p", "n1p_mid"),
-        model.r3,
-        model.totals,
-    )
-    with pytest.raises(ValueError, match="count-of-count"):
-        score_docs_kn3(
-            docs, legacy,
-            discounts3=(0.5, 1.1, 1.6), discounts2=(0.4, 0.9, 1.3),
-        )
 
 
 # ------------------------------------- round-14: order-n Kneser-Ney
@@ -504,84 +381,66 @@ def test_knn_hand_computed_five_leg_chain(spark):
     }
 
 
-def test_knn_order3_reduces_to_kn3(spark):
-    """The generic order-n chain at order=3 agrees with the hand-shaped
-    kn3 twins — single-D vs kn3_perplexity AND modified vs
-    score_docs_kn3(discounts3/discounts2) — on rounded avg_nll/ppl per
-    document (same association order by construction)."""
-    from prod2vec_spark.operators.lm import (
-        fit_kn3,
-        kn3_perplexity,
-        knn_perplexity,
-        score_docs_kn3,
-        with_train_split,
-    )
-    from prod2vec_spark.sources.io import read_table
-    from tests.conftest import SF_SMOKE
-
-    docs = read_table(spark, SF_SMOKE, "documents").limit(100)
-    tagged = with_train_split(docs, 0.8, seed="lm")
-    want = {
-        r["doc_id"]: (r["avg_nll"], r["ppl"], r["n_triples"], r["n_bo1"])
-        for r in kn3_perplexity(docs, tagged=tagged).collect()
-    }
-    got = {
-        r["doc_id"]: (r["avg_nll"], r["ppl"], r["n_grams"], r["n_bo"])
-        for r in knn_perplexity(docs, order=3, tagged=tagged).collect()
-    }
-    assert got == want
-    d3, d2 = (0.5, 1.1, 1.6), (0.4, 0.9, 1.3)
-    model = fit_kn3(tagged.where(F.col("is_train")))
-    want_m = {
-        r["doc_id"]: (r["avg_nll"], r["ppl"])
-        for r in score_docs_kn3(
-            tagged, model, discounts3=d3, discounts2=d2
-        ).collect()
-    }
-    got_m = {
-        r["doc_id"]: (r["avg_nll"], r["ppl"])
-        for r in knn_perplexity(
-            docs, order=3, discounts={3: d3, 2: d2}, tagged=tagged
-        ).collect()
-    }
-    assert got_m == want_m
-
-
-def test_knn_save_load_roundtrip(spark, tmp_path):
-    """fit_knn → save → load → score reproduces the in-memory model's
-    scores exactly (the KNModel persistence contract at order 4)."""
-    from prod2vec_spark.operators.lm import (
-        KNnModel,
-        fit_knn,
-        score_docs_knn,
-        with_train_split,
-    )
+@pytest.mark.parametrize("order", [2, 3, 4])
+def test_knn_save_load_roundtrip(spark, tmp_path, order):
+    """The train-once/score-many contract at every order: fit_knn +
+    score_docs_knn reproduce the self-trained knn_perplexity exactly
+    on the same split; save → load (the order read back from meta) →
+    score changes nothing; and a floor above every count leaves every
+    position backed off with finite scores (the context/continuation
+    tables keep the full training mass)."""
+    from prod2vec_spark.operators.lm import KNnModel, with_train_split
     from prod2vec_spark.sources.io import read_table
     from tests.conftest import SF_SMOKE
 
     docs = read_table(spark, SF_SMOKE, "documents").limit(60)
     tagged = with_train_split(docs, 0.8, seed="lm")
-    model = fit_knn(tagged.where(F.col("is_train")), order=4)
     want = {
+        r["doc_id"]: r.asDict()
+        for r in knn_perplexity(docs, order=order, tagged=tagged).collect()
+    }
+    model = fit_knn(tagged.where(F.col("is_train")), order=order)
+    got = {
         r["doc_id"]: r.asDict()
         for r in score_docs_knn(tagged, model).collect()
     }
-    model.save(str(tmp_path / "kn4"))
-    loaded = KNnModel.load(spark, str(tmp_path / "kn4"), order=4)
-    got = {
+    assert got == want and want
+    model.save(str(tmp_path / "model"))
+    loaded = KNnModel.load(spark, str(tmp_path / "model"))
+    assert loaded.order == order
+    got2 = {
         r["doc_id"]: r.asDict()
         for r in score_docs_knn(tagged, loaded).collect()
     }
-    assert got == want
+    assert got2 == want
+
+    hard = loaded.pruned(min_count=10_000)
+    rows = score_docs_knn(tagged, hard).collect()
+    assert rows and all(r["n_bo"] == r["n_grams"] for r in rows)
+    assert all(math.isfinite(r["avg_nll"]) for r in rows)
+
+
+def test_knn_load_without_meta_fails(spark, tmp_path):
+    """A directory without the ``meta`` table (e.g. one written by a
+    pre-order-n model class) cannot be loaded: the order is unknown,
+    so load fails with the read error instead of guessing."""
+    from pyspark.errors import AnalysisException
+
+    from prod2vec_spark.operators.lm import KNnModel
+
+    train = spark.createDataFrame(
+        [(1, "a b a b c")], "doc_id long, text string"
+    )
+    model = fit_knn(train, order=2)
+    legacy = str(tmp_path / "legacy")
+    model.counts[2].write.parquet(f"{legacy}/c2")
+    model.totals.write.parquet(f"{legacy}/totals")
+    with pytest.raises(AnalysisException, match="meta"):
+        KNnModel.load(spark, legacy)
 
 
 def test_knn_validation_errors(spark):
-    from prod2vec_spark.operators.lm import (
-        KNnModel,
-        fit_knn,
-        knn_perplexity,
-        score_docs_knn,
-    )
+    from prod2vec_spark.operators.lm import KNnModel
 
     docs = spark.createDataFrame(
         [(1, "a b c d e", True)], "doc_id long, text string, is_train boolean"
@@ -593,16 +452,31 @@ def test_knn_validation_errors(spark):
             spark.createDataFrame([(1, "a b c")], "doc_id long, text string"),
             order=5,
         )
+    with pytest.raises(ValueError, match="no 3-grams"):
+        fit_knn(
+            spark.createDataFrame([(1, "a b")], "doc_id long, text string"),
+            order=3,
+        )
+    solo = spark.createDataFrame(
+        [(1, "solo", False)], "doc_id long, text string, is_train boolean"
+    )
+    with pytest.raises(ValueError, match="no 2-grams"):
+        knn_perplexity(solo, order=2, tagged=solo)
+    for order in (2, 3):
+        with pytest.raises(ValueError, match="discount must be in"):
+            knn_perplexity(docs, order=order, discount=1.5, tagged=docs)
     model = fit_knn(docs, order=3)
     with pytest.raises(ValueError, match="discounts for levels"):
         score_docs_knn(docs, model, discounts={3: (0.5, 1.1, 1.6)})
-    with pytest.raises(ValueError, match="discount must be in"):
-        knn_perplexity(docs, order=3, discount=1.5, tagged=docs)
+    with pytest.raises(ValueError, match=">= 0"):
+        score_docs_knn(
+            docs, model, discounts={3: (-0.1, 1, 1), 2: (0.4, 0.9, 1.3)}
+        )
 
 
 def test_knn_pruned_keeps_interpolation_mass(spark):
     """KNnModel.pruned floors the top-level numerator but keeps the
-    interpolation legs (the KN3Model convention): a pruned singleton
+    interpolation legs (the order-3 convention above): a pruned singleton
     5-gram scores exactly its λ-chain, and n_bo counts it as
     backed off."""
     from prod2vec_spark.operators.lm import fit_knn, score_docs_knn
@@ -689,10 +563,10 @@ def test_knn_pruned_min_count_survives_save_load(spark, tmp_path):
     pruned = full.pruned(min_count=2)
     assert pruned.min_count == 2
     pruned.save(str(tmp_path / "kn5p"))
-    loaded_p = KNnModel.load(spark, str(tmp_path / "kn5p"), order=5)
+    loaded_p = KNnModel.load(spark, str(tmp_path / "kn5p"))
     assert loaded_p.min_count == 2
     full.save(str(tmp_path / "kn5f"))
-    loaded_f = KNnModel.load(spark, str(tmp_path / "kn5f"), order=5)
+    loaded_f = KNnModel.load(spark, str(tmp_path / "kn5f"))
     assert loaded_f.min_count is None
 
 
@@ -758,7 +632,7 @@ def test_knn_per_level_floors_persist_and_no_implicit_top(spark, tmp_path):
     mixed = full.pruned(min_count=2, min_counts={3: 3})
     assert mixed.min_counts == {4: 2, 3: 3}
     mixed.save(str(tmp_path / "kn4m"))
-    loaded = KNnModel.load(spark, str(tmp_path / "kn4m"), order=4)
+    loaded = KNnModel.load(spark, str(tmp_path / "kn4m"))
     assert loaded.min_counts == {4: 2, 3: 3}
     assert loaded.min_count == 2
     # no-arg default unchanged: top level floors at 2

@@ -1011,7 +1011,7 @@ def test_corpus_pipeline_lm_gate_under_kneser_ney(spark, tmp_path):
     import pytest as _pytest
     from pyspark.sql import functions as F
 
-    from prod2vec_spark.operators.lm import kn_perplexity
+    from prod2vec_spark.operators.lm import knn_perplexity
     from prod2vec_spark.pipeline_llm import CorpusConfig, CorpusCurationPipeline
     from tests.conftest import SF_SMOKE
 
@@ -1027,7 +1027,7 @@ def test_corpus_pipeline_lm_gate_under_kneser_ney(spark, tmp_path):
         r["doc_id"]
         for r in spark.read.parquet(f"{cfg.work_dir}/lm_kept").collect()
     }
-    rep = kn_perplexity(gate_in, train_frac=cfg.lm_train_frac)
+    rep = knn_perplexity(gate_in, order=2, train_frac=cfg.lm_train_frac)
     thr = rep.agg(
         F.percentile("ppl", F.lit(1.0 - cfg.lm_drop_pct)).alias("t")
     ).first()["t"]
@@ -1813,8 +1813,8 @@ def test_corpus_pipeline_kn_gate_with_derived_discount(spark, tmp_path):
 
     from prod2vec_spark.operators.lm import (
         estimate_discount,
-        fit_kn,
-        score_docs_kn,
+        fit_knn,
+        score_docs_knn,
         with_train_split,
     )
     from prod2vec_spark.pipeline_llm import CorpusConfig, CorpusCurationPipeline
@@ -1834,9 +1834,9 @@ def test_corpus_pipeline_kn_gate_with_derived_discount(spark, tmp_path):
 
     gate_in = spark.read.parquet(f"{cfg.work_dir}/quality_kept")
     tagged = with_train_split(gate_in, cfg.lm_train_frac, seed="lm")
-    model = fit_kn(tagged.where(F.col("is_train")))
-    assert estimate_discount(model.c2, "c2") == d
-    rep = score_docs_kn(tagged, model, discount=d)
+    model = fit_knn(tagged.where(F.col("is_train")), order=2)
+    assert estimate_discount(model.counts[2], "c2") == d
+    rep = score_docs_knn(tagged, model, discount=d)
     thr = rep.agg(
         F.percentile("ppl", F.lit(1.0 - cfg.lm_drop_pct)).alias("t")
     ).first()["t"]

@@ -315,18 +315,18 @@ def test_streaming_segment_gate_one_sided_vs_batch(spark, tmp_path):
 
 
 def test_streaming_lm_scoring_matches_batch(spark, tmp_path):
-    """start_lm_score_stream over a doc landing dir scores exactly as
-    batch score_docs with the same fitted model, stays exactly-once
-    across a no-new-input restart, and extends (not rewrites) on a
-    second landing batch."""
+    """start_score_stream with the Stupid-Backoff scorer over a doc
+    landing dir scores exactly as batch score_docs with the same fitted
+    model, stays exactly-once across a no-new-input restart, and
+    extends (not rewrites) on a second landing batch."""
     import shutil
 
     from prod2vec_spark.operators.lm import (
         BigramLM,
         fit_lm,
-        read_lm_scores,
+        read_scores,
         score_docs,
-        start_lm_score_stream,
+        start_score_stream,
     )
 
     docs = read_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
@@ -353,12 +353,16 @@ def test_streaming_lm_scoring_matches_batch(spark, tmp_path):
         stream = spark.readStream.schema("doc_id long, text string").parquet(
             str(landing)
         )
-        start_lm_score_stream(stream, model, out, ckpt).awaitTermination()
+        start_score_stream(
+            stream, lambda df: score_docs(df, model), out, ckpt
+        ).awaitTermination()
 
     def scores():
         return {
             r["doc_id"]: (r["n_pairs"], r["n_backoff"], r["avg_nll"], r["ppl"])
-            for r in read_lm_scores(spark, out).collect()
+            for r in read_scores(
+                spark, out, lambda df: score_docs(df, model)
+            ).collect()
         }
 
     def batch_scores(df):
@@ -549,156 +553,39 @@ def test_streaming_drop_ledger_partition_contract(spark, tmp_path):
     assert set(led.values()) <= {"quality_gate", "exact_dedup", "near_dedup"}
 
 
-def test_streaming_kn_scoring_matches_batch(spark, tmp_path):
-    """start_kn_score_stream — the Kneser-Ney twin: per-batch scores
-    equal batch score_docs_kn under the same persisted model, stay
-    exactly-once across a no-new-input restart, and extend on a
-    second landing batch."""
-    import shutil
-
-    from prod2vec_spark.operators.lm import (
-        KNModel,
-        fit_kn,
-        read_kn_scores,
-        score_docs_kn,
-        start_kn_score_stream,
-    )
-
-    docs = read_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
-    model = fit_kn(docs.where(F.col("doc_id") % 2 == 0))
-    model.save(str(tmp_path / "kn_model"))
-    model = KNModel.load(spark, str(tmp_path / "kn_model"))
-
-    half_a = docs.where(F.col("doc_id") < 25)
-    half_b = docs.where((F.col("doc_id") >= 25) & (F.col("doc_id") < 50))
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    half_a.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "sa"))
-    half_b.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "sb"))
-    shutil.copy(
-        sorted((tmp_path / "sa").glob("*.parquet"))[0], landing / "a.parquet"
-    )
-    out, ckpt = str(tmp_path / "scores"), str(tmp_path / "ckpt")
-
-    def drain():
-        stream = spark.readStream.schema("doc_id long, text string").parquet(
-            str(landing)
-        )
-        start_kn_score_stream(stream, model, out, ckpt).awaitTermination()
-
-    def scores():
-        return {
-            r["doc_id"]: (r["n_pairs"], r["n_unseen"], r["avg_nll"], r["ppl"])
-            for r in read_kn_scores(spark, out).collect()
-        }
-
-    def batch_scores(df):
-        return {
-            r["doc_id"]: (r["n_pairs"], r["n_unseen"], r["avg_nll"], r["ppl"])
-            for r in score_docs_kn(df, model).collect()
-        }
-
-    drain()
-    got_a = scores()
-    assert got_a and got_a == batch_scores(half_a)
-    drain()  # no-new-input restart: nothing double-scored
-    assert scores() == got_a
-    shutil.copy(
-        sorted((tmp_path / "sb").glob("*.parquet"))[0], landing / "b.parquet"
-    )
-    drain()
-    both = scores()
-    assert both == {**batch_scores(half_a), **batch_scores(half_b)}
-
-
-def test_streaming_kn3_scoring_matches_batch(spark, tmp_path):
-    """start_kn3_score_stream — the order-3 twin of the KN stream:
-    per-batch scores equal batch score_docs_kn3 under the same
-    persisted model (single-D AND modified discounts), stay
-    exactly-once across a no-new-input restart, and extend on a
-    second landing batch."""
-    import shutil
-
-    from prod2vec_spark.operators.lm import (
-        KN3Model,
-        fit_kn3,
-        read_kn3_scores,
-        score_docs_kn3,
-        start_kn3_score_stream,
-    )
-
-    docs = read_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
-    model = fit_kn3(docs.where(F.col("doc_id") % 2 == 0))
-    model.save(str(tmp_path / "kn3_model"))
-    model = KN3Model.load(spark, str(tmp_path / "kn3_model"))
-    D3, D2 = (0.5, 1.1, 1.6), (0.4, 0.9, 1.3)
-
-    half_a = docs.where(F.col("doc_id") < 25)
-    half_b = docs.where((F.col("doc_id") >= 25) & (F.col("doc_id") < 50))
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    half_a.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "sa"))
-    half_b.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "sb"))
-    shutil.copy(
-        sorted((tmp_path / "sa").glob("*.parquet"))[0], landing / "a.parquet"
-    )
-    out, ckpt = str(tmp_path / "scores"), str(tmp_path / "ckpt")
-
-    def drain():
-        stream = spark.readStream.schema("doc_id long, text string").parquet(
-            str(landing)
-        )
-        start_kn3_score_stream(
-            stream, model, out, ckpt, discounts3=D3, discounts2=D2
-        ).awaitTermination()
-
-    def scores():
-        return {
-            r["doc_id"]: (r["n_triples"], r["n_bo1"], r["avg_nll"], r["ppl"])
-            for r in read_kn3_scores(spark, out).collect()
-        }
-
-    def batch_scores(df):
-        return {
-            r["doc_id"]: (r["n_triples"], r["n_bo1"], r["avg_nll"], r["ppl"])
-            for r in score_docs_kn3(
-                df, model, discounts3=D3, discounts2=D2
-            ).collect()
-        }
-
-    drain()
-    got_a = scores()
-    assert got_a and got_a == batch_scores(half_a)
-    drain()  # no new input: exactly-once
-    assert scores() == got_a
-    shutil.copy(
-        sorted((tmp_path / "sb").glob("*.parquet"))[0], landing / "b.parquet"
-    )
-    drain()
-    assert scores() == {**batch_scores(half_a), **batch_scores(half_b)}
-
-
-def test_streaming_knn_scoring_matches_batch(spark, tmp_path):
-    """start_knn_score_stream — the ORDER-N member of the score-stream
-    family (round 14): per-batch scores equal batch score_docs_knn
-    under the same persisted order-4 model with per-level modified
-    discounts, stay exactly-once across a no-new-input restart, and
-    extend on a second landing batch."""
+@pytest.mark.parametrize(
+    "order, discounts",
+    [
+        (2, None),
+        (3, {3: (0.5, 1.1, 1.6), 2: (0.4, 0.9, 1.3)}),
+        (5, {k: (0.4, 0.9, 1.3) for k in (2, 3, 4, 5)}),
+    ],
+)
+def test_streaming_knn_scoring_matches_batch(
+    spark, tmp_path, order, discounts
+):
+    """start_score_stream with the order-n KN scorer: per-batch scores
+    equal batch score_docs_knn under the same persisted model (single-D
+    at order 2, per-level modified discounts above), the reader is
+    empty before the first commit, scoring stays exactly-once across a
+    no-new-input restart, and extends on a second landing batch."""
     import shutil
 
     from prod2vec_spark.operators.lm import (
         KNnModel,
         fit_knn,
-        read_knn_scores,
+        read_scores,
         score_docs_knn,
-        start_knn_score_stream,
+        start_score_stream,
     )
 
     docs = read_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
-    model = fit_knn(docs.where(F.col("doc_id") % 2 == 0), order=4)
-    model.save(str(tmp_path / "kn4_model"))
-    model = KNnModel.load(spark, str(tmp_path / "kn4_model"), order=4)
-    D = {k: (0.4, 0.9, 1.3) for k in (2, 3, 4)}
+    model = fit_knn(docs.where(F.col("doc_id") % 2 == 0), order=order)
+    model.save(str(tmp_path / "kn_model"))
+    model = KNnModel.load(spark, str(tmp_path / "kn_model"))
+
+    def score_fn(df):
+        return score_docs_knn(df, model, discounts=discounts)
 
     half_a = docs.where(F.col("doc_id") < 25)
     half_b = docs.where((F.col("doc_id") >= 25) & (F.col("doc_id") < 50))
@@ -715,20 +602,18 @@ def test_streaming_knn_scoring_matches_batch(spark, tmp_path):
         stream = spark.readStream.schema("doc_id long, text string").parquet(
             str(landing)
         )
-        start_knn_score_stream(
-            stream, model, out, ckpt, discounts=D
-        ).awaitTermination()
+        start_score_stream(stream, score_fn, out, ckpt).awaitTermination()
 
     def scores():
         return {
             r["doc_id"]: (r["n_grams"], r["n_bo"], r["avg_nll"], r["ppl"])
-            for r in read_knn_scores(spark, out).collect()
+            for r in read_scores(spark, out, score_fn).collect()
         }
 
     def batch_scores(df):
         return {
             r["doc_id"]: (r["n_grams"], r["n_bo"], r["avg_nll"], r["ppl"])
-            for r in score_docs_knn(df, model, discounts=D).collect()
+            for r in score_fn(df).collect()
         }
 
     assert scores() == {}  # empty before the first commit

@@ -1,13 +1,14 @@
 """Streaming MinHash/LSH near-dedup: first-presenter gate invariants,
 checked against the BATCH LSH operators as ground truth, plus
-cross-restart state persistence and idempotent re-drains.
+cross-restart state persistence and idempotent re-drains.  The long
+replay cases are ``slow``; the small registry-gate cases at the end
+run in the default suite.
 """
 
 from __future__ import annotations
 
 import pytest
 
-pytestmark = pytest.mark.slow  # e2e/replay file: driver-budget suite skips it (conftest hook)
 from pyspark.sql import functions as F
 
 from prod2vec_spark.operators.dedup import lsh_candidate_pairs, minhash_bands
@@ -31,6 +32,7 @@ def _drain(spark, landing, out, ckpt, **kw):
     q.awaitTermination()
 
 
+@pytest.mark.slow
 def test_first_presenter_gate_invariants(spark, tmp_path):
     """Drain an amplified corpus (guaranteed near-dups) and check the
     gate's contract against the batch operators:
@@ -85,6 +87,7 @@ def test_first_presenter_gate_invariants(spark, tmp_path):
     assert dropped.exceptAll(has_earlier).count() == 0
 
 
+@pytest.mark.slow
 def test_state_persists_across_restarts(spark, tmp_path):
     """A near-dup arriving in a LATER drain must still be dropped: the
     band registry lives in the checkpointed state store, not the
@@ -129,6 +132,7 @@ def test_state_persists_across_restarts(spark, tmp_path):
     assert read_decisions(spark, out).count() == 3
 
 
+@pytest.mark.slow
 def test_short_docs_bypass_state(spark, tmp_path):
     """Docs under shingle_k tokens never enter the state store — no
     decision rows, trivially kept by the caller."""
@@ -151,6 +155,7 @@ def test_short_docs_bypass_state(spark, tmp_path):
     assert got == {2}
 
 
+@pytest.mark.slow
 def test_streaming_cms_equals_batch_sketch(spark, tmp_path):
     """The incrementally-maintained CMS (per-batch partials summed on
     read) must equal the one-shot batch sketch of all data EXACTLY —
@@ -204,6 +209,7 @@ def test_streaming_cms_equals_batch_sketch(spark, tmp_path):
     assert merged.count() > 0
 
 
+@pytest.mark.slow
 def test_streaming_bottomk_equals_batch_sketch(spark, tmp_path):
     """The incrementally-maintained bottom-k sketch (per-batch
     partials re-taken on read) must equal the one-shot batch sketch of
@@ -271,6 +277,7 @@ def test_streaming_bottomk_equals_batch_sketch(spark, tmp_path):
     assert current() == full_expect and len(full_expect) == K
 
 
+@pytest.mark.slow
 def test_streaming_incremental_lsh_matches_batch(spark, tmp_path):
     """start_incremental_lsh_stream: the union of committed per-batch
     delta pair sets equals the batch pipeline's full pair set; a
@@ -354,6 +361,7 @@ def _drain_registry(spark, landing, reg, out, ckpt, **kw):
     q.awaitTermination()
 
 
+@pytest.mark.slow
 def test_registry_gate_matches_groupstate_gate(spark, tmp_path):
     """Round-17 parity lock: the JVM-only registry gate (the drain
     pipeline's shape) emits the EXACT decision table of the GroupState
@@ -418,3 +426,118 @@ def test_registry_gate_matches_groupstate_gate(spark, tmp_path):
     )
     assert reg.count() == n_sigs
     assert reg.select("band_id", "band_sig").distinct().count() == n_sigs
+
+
+def _tiny_amplified(spark, n_src: int):
+    """``n_src`` source docs amplified 3x: guaranteed near-dups."""
+    return (
+        amplify_documents(
+            read_table(spark, SF_SMOKE, "documents").limit(n_src), factor=3
+        )
+        .select("doc_id", "text", "lang")
+        .localCheckpoint()
+    )
+
+
+def test_registry_gate_matches_groupstate_gate_one_wave(spark, tmp_path):
+    """Default-suite twin of the parity lock above: one wave of a tiny
+    amplified corpus, registry gate vs GroupState gate — identical
+    decision tables, with real drops among them."""
+    docs = _tiny_amplified(spark, 20)
+    landing = str(tmp_path / "landing")
+    docs.coalesce(1).write.parquet(landing)
+    gs_out, rg_out = str(tmp_path / "gs_out"), str(tmp_path / "rg_out")
+    _drain(spark, landing, gs_out, str(tmp_path / "gs_ckpt"))
+    reg, rg_ckpt = str(tmp_path / "reg"), str(tmp_path / "rg_ckpt")
+    _drain_registry(spark, landing, reg, rg_out, rg_ckpt)
+
+    def decisions(out):
+        return {
+            (r["doc_id"], r["keep"])
+            for r in read_decisions(spark, out).collect()
+        }
+
+    got = decisions(rg_out)
+    assert got == decisions(gs_out)
+    assert {k for _, k in got} == {0, 1}
+
+
+def test_registry_gate_reads_file_uri_registry(spark, tmp_path, monkeypatch):
+    """A ``file://`` registry dir is probed through the Hadoop
+    FileSystem: the second wave's verbatim copies of first-wave docs
+    all drop, because the committed registry partials are found (a
+    local glob misses them and the copies would own their bands); and
+    no literal ``file:`` directory appears in the working directory."""
+    import shutil
+
+    from prod2vec_spark.streaming.neardup import read_band_registry
+
+    monkeypatch.chdir(tmp_path)
+    wave_a = read_table(spark, SF_SMOKE, "documents").limit(15).select(
+        "doc_id", "text", "lang"
+    )
+    wave_b = wave_a.select(
+        (F.col("doc_id") + 100_000).alias("doc_id"), "text", "lang"
+    )
+    for name, wave in [("a", wave_a), ("b", wave_b)]:
+        wave.coalesce(1).write.parquet(str(tmp_path / f"st_{name}"))
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    reg = (tmp_path / "registry").as_uri()
+    assert reg.startswith("file:")
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+
+    def wave(name):
+        for f in (tmp_path / f"st_{name}").glob("*.parquet"):
+            shutil.copy(f, landing / f"{name}.parquet")
+        _drain_registry(spark, str(landing), reg, out, ckpt)
+
+    wave("a")
+    assert read_band_registry(spark, reg).count() > 0
+    wave("b")
+    copies = {
+        r["doc_id"]: r["keep"]
+        for r in read_decisions(spark, out).collect()
+        if r["doc_id"] >= 100_000
+    }
+    assert copies and set(copies.values()) == {0}
+    assert not (tmp_path / "file:").exists()
+
+
+def test_pipeline_registry_gate_ignores_groupstate_checkpoint(spark, tmp_path):
+    """The corpus pipeline's registry gate checkpoints in its own
+    directory.  A GroupState gate's checkpoint left at
+    ``work_dir/ckpt_neardup`` has consumed every committed exact-dedup
+    file; resuming the registry gate from it would skip them all with
+    an empty registry and decide nothing.  With its own checkpoint,
+    every banded doc gets a decision."""
+    from prod2vec_spark.streaming.pipeline import (
+        _EXACT_SCHEMA,
+        StreamCorpusConfig,
+        StreamingCorpusPipeline,
+    )
+
+    cfg = StreamCorpusConfig(
+        landing_dir=str(tmp_path / "landing"), work_dir=str(tmp_path / "work")
+    )
+    docs = _tiny_amplified(spark, 10)
+    docs.withColumn("text_hash", F.col("text")).coalesce(1).write.parquet(
+        cfg.exact_dir
+    )
+    leftover = spark.readStream.schema(_EXACT_SCHEMA).parquet(cfg.exact_dir)
+    start_near_dedup(
+        streaming_band_owners(leftover),
+        str(tmp_path / "old_decisions"),
+        f"{cfg.work_dir}/ckpt_neardup",
+    ).awaitTermination()
+
+    StreamingCorpusPipeline(spark, cfg).neardup_stage()
+    decided = {
+        r["doc_id"]
+        for r in read_decisions(spark, cfg.decisions_dir).collect()
+    }
+    banded = {
+        r["doc_id"]
+        for r in minhash_bands(docs).select("doc_id").distinct().collect()
+    }
+    assert decided == banded and banded

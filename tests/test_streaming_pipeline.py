@@ -159,7 +159,7 @@ def test_streaming_corpus_lm_gate_matches_batch_across_restart(
     spark, tmp_path
 ):
     """Round-14 (VERDICT r13 ask #6): the streaming corpus pipeline's
-    KN3 LM gate — a batch-trained model + frozen threshold — keeps
+    order-3 KN LM gate — a batch-trained model + frozen threshold — keeps
     EXACTLY the docs the batch gate semantics keep (ppl <= thr via
     semi join, so unscored/too-short docs drop on both sides), stays
     correct across a restart with a second landing wave, and the drop
@@ -167,9 +167,9 @@ def test_streaming_corpus_lm_gate_matches_batch_across_restart(
     import shutil
 
     from prod2vec_spark.operators.lm import (
-        KN3Model,
-        fit_kn3,
-        score_docs_kn3,
+        KNnModel,
+        fit_knn,
+        score_docs_knn,
     )
     from prod2vec_spark.streaming.pipeline import (
         StreamCorpusConfig,
@@ -198,13 +198,13 @@ def test_streaming_corpus_lm_gate_matches_batch_across_restart(
     docs = docs.unionByName(short)
 
     # batch-trained model (the vetted-archive fit) persisted to disk
-    model = fit_kn3(docs.where(F.col("doc_id") % 2 == 0))
+    model = fit_knn(docs.where(F.col("doc_id") % 2 == 0), order=3)
     model_dir = str(tmp_path / "kn3_model")
     model.save(model_dir)
-    model = KN3Model.load(spark, model_dir)
+    model = KNnModel.load(spark, model_dir)
 
     # the frozen threshold = the batch percentile computed offline
-    scored = score_docs_kn3(docs, model)
+    scored = score_docs_knn(docs, model)
     thr = scored.agg(
         F.percentile("ppl", F.lit(0.8)).alias("t")
     ).first()["t"]
@@ -229,7 +229,7 @@ def test_streaming_corpus_lm_gate_matches_batch_across_restart(
         work_dir=str(tmp_path / "work"),
         lm_gate=True,
         lm_model_dir=model_dir,
-        lm_smoothing="kneser_ney3",
+        lm_smoothing="kneser_ney",
         lm_max_ppl=float(thr),
     )
     cur_a = StreamingCorpusPipeline(spark, cfg).run()
@@ -339,9 +339,10 @@ def test_streaming_token_stats_match_batch_counter(spark, tmp_path):
 
 def test_streaming_corpus_lm_gate_order_n(spark, tmp_path):
     """The streaming LM gate under the generic ORDER-N scorer
-    (kneser_ney_n, order 4, per-level modified discounts): curated()
-    equals the batch keep set under the same persisted model and
-    frozen threshold; ledger attributes 'lm_gate'."""
+    (kneser_ney, an order-4 model — the order comes from its meta —
+    with per-level modified discounts): curated() equals the batch
+    keep set under the same persisted model and frozen threshold;
+    ledger attributes 'lm_gate'."""
     import hashlib
     import shutil
 
@@ -364,7 +365,7 @@ def test_streaming_corpus_lm_gate_order_n(spark, tmp_path):
     model = fit_knn(docs.where(F.col("doc_id") % 2 == 0), order=4)
     model_dir = str(tmp_path / "kn4_model")
     model.save(model_dir)
-    model = KNnModel.load(spark, model_dir, order=4)
+    model = KNnModel.load(spark, model_dir)
     D = {k: (0.4, 0.9, 1.3) for k in (2, 3, 4)}
 
     scored = score_docs_knn(docs, model, discounts=D)
@@ -385,8 +386,7 @@ def test_streaming_corpus_lm_gate_order_n(spark, tmp_path):
         work_dir=str(tmp_path / "work"),
         lm_gate=True,
         lm_model_dir=model_dir,
-        lm_smoothing="kneser_ney_n",
-        lm_model_order=4,
+        lm_smoothing="kneser_ney",
         lm_discounts_n=D,
         lm_max_ppl=float(thr),
     )
@@ -411,7 +411,7 @@ def test_streaming_lm_gate_runs_before_near_dedup(spark, tmp_path):
     import shutil
 
     from prod2vec_spark.operators import dedup as DD
-    from prod2vec_spark.operators.lm import KN3Model, fit_kn3, score_docs_kn3
+    from prod2vec_spark.operators.lm import KNnModel, fit_knn, score_docs_knn
     from prod2vec_spark.streaming.pipeline import (
         StreamCorpusConfig,
         StreamingCorpusPipeline,
@@ -441,17 +441,17 @@ def test_streaming_lm_gate_runs_before_near_dedup(spark, tmp_path):
         [(100 + i, prefix + " p1 p2 p3 p4") for i in range(3)],
         "doc_id long, text string",
     )
-    model = fit_kn3(train)
+    model = fit_knn(train, order=3)
     model_dir = str(tmp_path / "m")
     model.save(model_dir)
-    model = KN3Model.load(spark, model_dir)
+    model = KNnModel.load(spark, model_dir)
     both = spark.createDataFrame(
         [(1, a_text, "en"), (2, b_text, "en")],
         "doc_id long, text string, lang string",
     )
     ppl = {
         r["doc_id"]: r["ppl"]
-        for r in score_docs_kn3(both.drop("lang"), model).collect()
+        for r in score_docs_knn(both.drop("lang"), model).collect()
     }
     assert ppl[1] > ppl[2]
     thr = (ppl[1] + ppl[2]) / 2
@@ -467,7 +467,7 @@ def test_streaming_lm_gate_runs_before_near_dedup(spark, tmp_path):
         work_dir=str(tmp_path / "work"),
         lm_gate=True,
         lm_model_dir=model_dir,
-        lm_smoothing="kneser_ney3",
+        lm_smoothing="kneser_ney",
         lm_max_ppl=float(thr),
     )
     pipe = StreamingCorpusPipeline(spark, cfg)
